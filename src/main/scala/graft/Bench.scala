@@ -141,6 +141,10 @@ object Bench {
     // 2000-char stdout window after seven dark rounds), then total-only
     // as the last resort. The r18 verdict asked for exactly this array
     // form; full-resolution per-query numbers stay in BENCH_DETAIL.json.
+    // The `t` array follows `ordered`: LEXICAL order of the full
+    // registered names, so q10*..q19* sort before q2* and q100* before
+    // q11*; map a position back through the sorted name list, never
+    // through the numeric qNN sequence.
     def renderArr: String = {
       val ts = results.map { case (_, v) => f"$v%.1f" }.mkString("[", ",", "]")
       f"""{"metric":"total","unit":"sec","sf":"$sfTag","t":$ts,"value":$total%.3f}"""

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.util.CacheScope
 
 /** The flagship enrich join + validation (SURVEY.md §2: J1, J2/P5, P3).
   *
@@ -37,10 +38,16 @@ object EnrichOps {
       chart("episodeUri") === episodes("id"), "left")
 
   /** J2 eagerly: join, assert totality + name equality, drop join
-    * duplicates. Costs one extra (cheap, broadcast-side) pass for the
-    * check; use [[enrichObserved]] on the hot path. */
+    * duplicates. The join is persisted through [[CacheScope.persist]]
+    * and the violation `count()` fills that cache, so the whole upstream
+    * (chart side, episode fetch, broadcast) runs once and the caller's
+    * action on the result only scans the cache. Call it inside
+    * [[CacheScope.withScope]], with the consuming action in the same
+    * scope: outside one the cache outlives the call and the caller owns
+    * its release. Use [[enrichObserved]] when the action is
+    * side-effect-free and the validation may follow it. */
   def enrichValidated(chart: DataFrame, episodes: DataFrame): DataFrame = {
-    val joined = enrich(chart, episodes)
+    val joined = CacheScope.persist(enrich(chart, episodes))
     val n = joined.filter(nameViolation).count()
     if (n > 0) throw new JoinValidationException(n)
     joined.drop("id", "name")

@@ -3,6 +3,7 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{EnrichOps, UnionOps}
+import graft.util.CacheScope
 
 /** Date-parameterized reprocessing (SURVEY.md §3.2 — the backfill DAG):
   * charts are the durable raw layer, episode metadata is re-fetchable,
@@ -20,9 +21,12 @@ import graft.ops.{EnrichOps, UnionOps}
 object Backfill {
 
   /** Re-enrich one logical date from the persisted bronze chart
-    * snapshot against a (re-fetched) episode dim. */
+    * snapshot against a (re-fetched) episode dim. The bronze partition
+    * and the episode dim are read once: the validation fills the
+    * enrich cache and the silver write scans it. The cache is released
+    * on return, so an action on the result recomputes it. */
   def reprocessDate(spark: SparkSession, date: String,
-      episodes: DataFrame, layout: Pipeline.Layout): DataFrame = {
+      episodes: DataFrame, layout: Pipeline.Layout): DataFrame = CacheScope.withScope {
     val chart = spark.read.parquet(layout.bronzeDir)
       .filter(col("date") === lit(date)) // partition pruning
     // validate BEFORE overwriting the partition — a failed check must

@@ -1,7 +1,9 @@
 package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.ops.{ChartOps, EnrichOps, EpisodeOps, UnionOps}
+import graft.util.CacheScope
 
 /** End-to-end daily pipeline (SURVEY.md §3.1 restated Spark-first).
   *
@@ -11,9 +13,11 @@ import graft.ops.{ChartOps, EnrichOps, EpisodeOps, UnionOps}
   * (`spotify_eps_backfill_dag.py:19`): any date reprocesses idempotently
   * via dynamic partition overwrite.
   *
-  * One Spark job, no intermediate materialization except the required
-  * sinks; the enrich validation rides the silver write action via
-  * `Dataset.observe` (zero extra scans).
+  * Each stage of a date is evaluated once: the parsed chart is
+  * persisted (filled by the bronze write) and the enrich join is
+  * persisted (filled by the eager validation `count()`), so the silver
+  * write only scans the cache. Both caches live in one
+  * [[graft.util.CacheScope]] per call and are released on return.
   */
 object Pipeline {
 
@@ -22,14 +26,20 @@ object Pipeline {
   /** Ingest → validate → silver snapshot for one logical date.
     * `chartPayloads`/`episodePayloads`: (date, region, payload) /
     * (payload) rows from the ingest boundary (driver fetch or fixture).
-    * Returns the enriched frame (already persisted).
+    *
+    * The parsed chart is repartitioned by `date` — a date holds at most
+    * 22 regions × 200 rows, so one task and one bronze and one silver
+    * file per date is safe; the region fetches upstream stay parallel.
+    * Returns the enriched frame. Its caches are released on return, so
+    * an action on it recomputes the date from the payloads.
     */
   def runDaily(
       spark: SparkSession,
       chartPayloads: DataFrame,
       episodePayloads: DataFrame,
-      layout: Layout): DataFrame = {
-    val chart = ChartOps.parsePayloads(chartPayloads)
+      layout: Layout): DataFrame = CacheScope.withScope {
+    val chart = CacheScope.persist(
+      ChartOps.parsePayloads(chartPayloads).repartition(col("date")))
     UnionOps.writeDailySnapshot(chart, layout.bronzeDir)
 
     val episodes = EpisodeOps.flatten(EpisodeOps.parsePayloads(episodePayloads))
@@ -38,10 +48,9 @@ object Pipeline {
     // dim: O(history) work, and any retired episode id would fail
     // validation and overwrite good history). Re-enriching old dates is
     // Backfill's job, one pruned partition at a time.
-    // Validation is EAGER (extra broadcast-side pass) and must precede
-    // the write: the reference raises before uploading
-    // (spotify_eps.py:189); validate-on-write would first replace the
-    // silver partition with null-enriched rows.
+    // Validation is EAGER and must precede the write: the reference
+    // raises before uploading (spotify_eps.py:189); validate-on-write
+    // would first replace the silver partition with null-enriched rows.
     val enriched = EnrichOps.enrichValidated(chart, episodes)
     UnionOps.writeDailySnapshot(enriched, layout.silverDir)
     enriched

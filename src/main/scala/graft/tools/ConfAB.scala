@@ -14,7 +14,7 @@ object ConfAB {
       .map(_.trim).map {
         case "-" => Seq.empty[(String, String)]
         case s => s.split(',').toSeq.map { kv =>
-          val Array(k, v) = kv.split('='); (k, v)
+          val Array(k, v) = kv.split("=", 2); (k, v)
         }
       }
     val names = args.drop(2).toSeq

@@ -25,7 +25,7 @@ object ProfileQuery {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
     sys.env.get("PROFILE_EXTRA_CONF").foreach { s =>
       s.split(';').filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split('=')
+        val Array(k, v) = kv.split("=", 2)
         b = b.config(k, v)
       }
     }

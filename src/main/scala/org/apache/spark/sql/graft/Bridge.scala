@@ -47,6 +47,12 @@ object Bridge {
       .sessionState.catalog.listLocalTempViews("*")
       .map(_.table)
 
+  /** Number of frames the session's CacheManager holds (persisted and
+    * not yet unpersisted) — what a scoped run must leave as it found. */
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
+      .sharedState.cacheManager.numCachedEntries
+
   /** Release the materialized blocks behind a `localCheckpoint`ed
     * frame. `Dataset.unpersist` won't: checkpoint blocks live on the
     * checkpointed RDD, not in the CacheManager, so a superseded

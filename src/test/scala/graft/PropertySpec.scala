@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.{ChartOps, EnrichOps}
 import graft.operators.{Dedup, Salting}
+import graft.util.CacheScope
 
 /** Property-based invariants (SURVEY §5.2): rank density, validation
   * totality, union monotonicity, salted-agg equivalence, Jaccard bounds.
@@ -56,12 +57,15 @@ class PropertySpec extends SparkSpec {
       val s = spark
       import s.implicits._
       val dim = entries.toDF("id", "name")
-      val out = EnrichOps.enrichValidated(chart, dim)
-      assert(out.count() == entries.length)
+      // enrichValidated persists its join: scoped, so no cache outlives the case
+      CacheScope.withScope {
+        val out = EnrichOps.enrichValidated(chart, dim)
+        assert(out.count() == entries.length)
+      }
       if (entries.length > 1) {
         val missing = dim.filter(col("id") =!= entries.head._1)
         intercept[EnrichOps.JoinValidationException] {
-          EnrichOps.enrichValidated(chart, missing)
+          CacheScope.withScope(EnrichOps.enrichValidated(chart, missing))
         }
       }
     }

@@ -20,6 +20,20 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** What the session holds cached: CacheManager entries and the ids
+    * of persisted RDDs. */
+  def cacheState: (Int, Set[Int]) = (
+    org.apache.spark.sql.graft.Bridge.cachedEntries(spark),
+    spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  /** No cache entry or persisted RDD added since `before` (RDDs the
+    * cleaner drops meanwhile are fine). */
+  def assertCacheAsFound(before: (Int, Set[Int])): Unit = {
+    val (entries, rdds) = cacheState
+    assert(entries == before._1, "cache manager entries left behind")
+    assert((rdds -- before._2).isEmpty, s"persistent RDDs left behind: ${rdds -- before._2}")
+  }
+
   /** Payload frame for ChartOps/EpisodeOps parsers. */
   def payloadDf(rows: Seq[(String, String, String)]): DataFrame = {
     val s = spark

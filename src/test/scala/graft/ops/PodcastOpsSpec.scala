@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Schemas
+import graft.util.CacheScope
 
 class ChartOpsSpec extends SparkSpec {
 
@@ -62,19 +63,23 @@ class EnrichOpsSpec extends SparkSpec {
   private def episodes = EpisodeOps.flatten(EpisodeOps.parsePayloads(
     payloadDf(Seq(("2024-10-22", "us", resource("episodes_us.json"))))))
 
+  // enrichValidated persists its join: every caller runs in a scope so
+  // nothing stays cached in the shared session
   test("happy path: row count preserved, join keys dropped (J1, P3)") {
-    val out = EnrichOps.enrichValidated(chart, episodes)
-    assert(out.count() == 3)
-    assert(!out.columns.contains("id") && !out.columns.contains("name"))
-    assert(out.columns.contains("show.name"))
-    val row = out.filter(col("rank") === 2).select(col("`show.publisher`")).head()
-    assert(row.getString(0) == "PodCo")
+    CacheScope.withScope {
+      val out = EnrichOps.enrichValidated(chart, episodes)
+      assert(out.count() == 3)
+      assert(!out.columns.contains("id") && !out.columns.contains("name"))
+      assert(out.columns.contains("show.name"))
+      val row = out.filter(col("rank") === 2).select(col("`show.publisher`")).head()
+      assert(row.getString(0) == "PodCo")
+    }
   }
 
   test("unmatched chart row fails validation (P5 pandas NaN semantics)") {
     val missingOne = episodes.filter(col("id") =!= "ep002bbbbbbbbbbbbbbbbb")
     val e = intercept[EnrichOps.JoinValidationException] {
-      EnrichOps.enrichValidated(chart, missingOne)
+      CacheScope.withScope(EnrichOps.enrichValidated(chart, missingOne))
     }
     assert(e.getMessage.contains("1 chart row"))
   }
@@ -84,7 +89,7 @@ class EnrichOpsSpec extends SparkSpec {
       when(col("id") === "ep001aaaaaaaaaaaaaaaaa", "Wrong Name")
         .otherwise(col("name")))
     intercept[EnrichOps.JoinValidationException] {
-      EnrichOps.enrichValidated(chart, renamed)
+      CacheScope.withScope(EnrichOps.enrichValidated(chart, renamed))
     }
   }
 
@@ -96,7 +101,7 @@ class EnrichOpsSpec extends SparkSpec {
       when(col("episodeUri") === "ep001aaaaaaaaaaaaaaaaa", lit(null: String))
         .otherwise(col("episodeName")))
     intercept[EnrichOps.JoinValidationException] {
-      EnrichOps.enrichValidated(nulledChart, nulled)
+      CacheScope.withScope(EnrichOps.enrichValidated(nulledChart, nulled))
     }
   }
 
@@ -173,6 +178,84 @@ class PipelineSpec extends SparkSpec {
       payloadDf(Seq(("2024-10-22", "us", resource("episodes_us.json")))),
       layout)
     assert(Pipeline.rebuildGold(spark, layout).count() == 3)
+  }
+
+  // Two dates × three regions of numeric episode ids drawn with overlap
+  // from one pool; chart names match BatchedLookup.fixtureEpisodeService.
+  private val dates = Seq("2024-10-21", "2024-10-22")
+  private val regions = Seq("us", "de", "br")
+  private val perRegion = 40
+  private def chartIds(d: Int, r: Int): Seq[Int] =
+    (0 until perRegion).map(i => 1000 + (i * (r + 2) + d * 7) % 90)
+  private def charts = payloadDf(
+    for ((d, di) <- dates.zipWithIndex; (r, ri) <- regions.zipWithIndex)
+      yield (d, r, chartIds(di, ri).map(id =>
+        s"""{"episodeUri":"spotify:episode:$id","showUri":"spotify:show:s$id",
+           |"episodeName":"ep-$id","chartRankMove":"NEW"}""".stripMargin)
+        .mkString("[", ",", "]")))
+  private val distinctIds =
+    (for (d <- dates.indices; r <- regions.indices) yield chartIds(d, r)).flatten.toSet
+
+  /** Episode payloads fetched 50 ids per call; `sent` counts every id
+    * sent, so a re-evaluation of the fetch counts its ids again.
+    * `drop` ids are left out of the answers (validation then fails). */
+  private def fetchedEpisodes(sent: org.apache.spark.util.LongAccumulator,
+      drop: Set[String] = Set.empty) = {
+    val ids = ChartOps.parsePayloads(charts).select("episodeUri").distinct()
+    BatchedLookup.fetchPayloads(ids, "episodeUri", 50, (batch: Seq[String]) => {
+      sent.add(batch.size.toLong)
+      BatchedLookup.fixtureEpisodeService(batch.filterNot(drop))
+    })
+  }
+
+  private def layoutAt(prefix: String) = {
+    val base = tmpDir(prefix)
+    Pipeline.Layout(s"$base/bronze", s"$base/silver", s"$base/gold")
+  }
+
+  private def partitionFiles(tableDir: String, date: String): Seq[(String, Long)] =
+    Option(new java.io.File(s"$tableDir/date=$date").listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.length)).sortBy(_._1)
+
+  test("a date whose episodes fail validation throws and leaves its silver partition as it was") {
+    val layout = layoutAt("validate_first")
+    Pipeline.runDaily(spark, charts,
+      fetchedEpisodes(spark.sparkContext.longAccumulator("sent")), layout)
+    def silverRows = spark.read.parquet(layout.silverDir)
+      .filter(col("date") === dates.last).collect().map(_.toString).sorted.toSeq
+    val rowsBefore = silverRows
+    val filesBefore = dates.map(partitionFiles(layout.silverDir, _))
+    assert(rowsBefore.size == regions.size * perRegion)
+
+    val e = intercept[EnrichOps.JoinValidationException] {
+      Pipeline.runDaily(spark, charts,
+        fetchedEpisodes(spark.sparkContext.longAccumulator("sent"), drop = Set("1000")), layout)
+    }
+    assert(e.getMessage.contains("unmatched or name-mismatched"))
+    assert(dates.map(partitionFiles(layout.silverDir, _)) == filesBefore)
+    assert(silverRows == rowsBefore)
+  }
+
+  test("each distinct id is looked up once, one file per date partition, no cache left behind") {
+    val layout = layoutAt("one_pass")
+    val before = cacheState
+    val sent = spark.sparkContext.longAccumulator("sent")
+    val enriched = Pipeline.runDaily(spark, charts, fetchedEpisodes(sent), layout)
+    assert(sent.sum == distinctIds.size.toLong)
+    for (table <- Seq(layout.bronzeDir, layout.silverDir); d <- dates)
+      assert(partitionFiles(table, d).size == 1, s"$table date=$d")
+    assertCacheAsFound(before)
+    // the returned frame is released: acting on it recomputes, correctly
+    assert(enriched.filter(col("duration_ms").isNull).isEmpty)
+    assert(enriched.count() == dates.size * regions.size * perRegion)
+
+    val failing = spark.sparkContext.longAccumulator("sent")
+    intercept[EnrichOps.JoinValidationException] {
+      Pipeline.runDaily(spark, charts, fetchedEpisodes(failing, drop = Set("1000")), layout)
+    }
+    assert(failing.sum == distinctIds.size.toLong)
+    assertCacheAsFound(before)
   }
 }
 

@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ops.ChartOps
+import graft.ops.{BatchedLookup, ChartOps, EpisodeOps}
 
 class BackfillSpec extends SparkSpec {
 
@@ -34,6 +34,29 @@ class BackfillSpec extends SparkSpec {
     assert(after.count() == 6) // overwrite, not append
     assert(after.filter(col("date") === "2024-10-22" && col("meta") === "v2").count() == 3)
     assert(after.filter(col("date") === "2024-10-21" && col("meta") === "v1").count() == 3)
+  }
+
+  test("one-date backfill looks each id up once and leaves no cache behind") {
+    val base = tmpDir("backfill_once")
+    val layout = Pipeline.Layout(s"$base/bronze", s"$base/silver", s"$base/gold")
+    val entries = (1 to 60).map(i => s"""{"episodeUri":"spotify:episode:${100 + i % 45}",
+        |"showUri":"spotify:show:s$i","episodeName":"ep-${100 + i % 45}",
+        |"chartRankMove":"NEW"}""".stripMargin).mkString("[", ",", "]")
+    val bronze = ChartOps.parsePayloads(payloadDf(Seq(
+      ("2024-10-22", "us", entries), ("2024-10-22", "de", entries))))
+    graft.ops.UnionOps.writeDailySnapshot(bronze, layout.bronzeDir)
+
+    val sent = spark.sparkContext.longAccumulator("sent")
+    val eps = EpisodeOps.flatten(EpisodeOps.parsePayloads(BatchedLookup.fetchPayloads(
+      bronze.select("episodeUri").distinct(), "episodeUri", 50, (batch: Seq[String]) => {
+        sent.add(batch.size.toLong)
+        BatchedLookup.fixtureEpisodeService(batch)
+      })))
+    val before = cacheState
+    Backfill.reprocessDate(spark, "2024-10-22", eps, layout)
+    assert(sent.sum == 45L) // validation and silver write share one fetch
+    assertCacheAsFound(before)
+    assert(spark.read.parquet(layout.silverDir).count() == 120)
   }
 
   test("incremental gold processes only new silver files per run") {
