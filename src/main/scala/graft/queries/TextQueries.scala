@@ -1297,6 +1297,7 @@ object TextQueries extends QueryPack {
       // quality filter and the row chain evaluates twice per doc
       // r19: eager localCheckpoint (see q200) — truncates the redact
       // chain out of the quality/budget tail's plans
+      // released by the enclosing CacheScope.withScope (Bench/Verify); unscoped callers own it
       val redacted = graft.util.CacheScope.checkpoint(
         graft.operators.Dedup.redactAllSpans(survivors,
             "doc_id", "text", k = 5, minSpan = 12, maxDf = 2, minDf = 3)
@@ -1469,10 +1470,12 @@ object TextQueries extends QueryPack {
       // subtree in every consumer's analysis and AQE replan);
       // truncating to an RDD leaf cuts the downstream decontam/quality
       // plans to the composed stages actually being planned
+      // released by the enclosing CacheScope.withScope (Bench/Verify); unscoped callers own it
       val redacted = graft.util.CacheScope.checkpoint(
         graft.operators.Dedup.redactAllSpans(survivors,
             "doc_id", "text", k = 5, minSpan = 12, maxDf = 2, minDf = 3)
           .select(col("doc_id"), col("kept_text").as("text")))
+      // released by the enclosing CacheScope.withScope (Bench/Verify); unscoped callers own it
       val decon = graft.util.CacheScope.checkpoint(
         graft.operators.Decontam.redactContamination(redacted,
             bench, "doc_id", "text", k = 3, windowW = 4, minShared = 2,

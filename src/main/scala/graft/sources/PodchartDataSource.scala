@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -11,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the chart ingest boundary (SURVEY.md §2.1
   * S1): `spark.read.format("podchart").load(dir)`.
@@ -144,14 +146,19 @@ class PodchartScanBuilder(path: String, opts: CaseInsensitiveStringMap)
       .map(s => PodchartPartition(s.getPath.toString): InputPartition)
   }
 
-  /** The session's Hadoop conf is serialized into the factory (the way
-    * Spark's own file sources do) so spark.hadoop.* settings — s3a
-    * credentials/endpoints, custom FS impls — reach the executor-side
-    * read; an empty executor-side `new Configuration()` would resolve
-    * only schemes that need zero config. */
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PodchartReaderFactory(new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+  /** The session's Hadoop conf is broadcast once per scan (the way
+    * Spark's own `FileSourceScanExec` does) so spark.hadoop.* settings —
+    * s3a credentials/endpoints, custom FS impls — reach the
+    * executor-side read; an empty executor-side `new Configuration()`
+    * would resolve only schemes that need zero config. The factory
+    * carries only the broadcast handle: a conf held as a field would be
+    * in every task's closure and deserialized by every task, including
+    * tasks that read a cache built on top of this scan. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    new PodchartReaderFactory(spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+  }
 }
 
 case class PodchartPartition(file: String) extends InputPartition
@@ -162,7 +169,7 @@ case class HttpChartPartition(url: String, chart: String, region: String,
     date: String, referer: Option[String]) extends InputPartition
 
 class PodchartReaderFactory(
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -199,7 +206,7 @@ class PodchartHttpReader(p: HttpChartPartition)
 }
 
 class PodchartReader(file: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends PartitionReader[InternalRow] {
   private var consumed = false
 
@@ -215,7 +222,7 @@ class PodchartReader(file: String,
     }
     // executor-side read with the DRIVER'S Hadoop conf, so the same
     // credentials/FS settings the planner listed with apply here
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf.value.value)
     val len = fs.getFileStatus(p).getLen
     // one row holds the whole payload as a String; a >2GB chart file
     // cannot be represented and must fail loudly, not truncate

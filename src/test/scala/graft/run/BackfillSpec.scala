@@ -59,41 +59,84 @@ class BackfillSpec extends SparkSpec {
     assert(spark.read.parquet(layout.silverDir).count() == 120)
   }
 
-  test("incremental gold processes only new silver files per run") {
+  private val goldSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("k",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("v",
+      org.apache.spark.sql.types.StringType)))
+
+  // the monitored dir holds FLAT snapshot files (one per day, like the
+  // reference's top_podcasts_YYYY-MM-DD.parquet layout)
+  private def addSnapshot(base: String, rows: Seq[(Long, String)],
+      name: String): Unit = {
     val s = spark
     import s.implicits._
-    import graft.streaming.StreamingOps
+    val scratch = tmpDir("snap")
+    rows.toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(s"$scratch/out")
+    val part = new java.io.File(s"$scratch/out").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/silver"))
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$base/silver/$name"))
+  }
+
+  private def drain(base: String): Long =
+    graft.streaming.StreamingOps.incrementalGold(spark, s"$base/silver",
+      s"$base/gold", s"$base/ckpt", goldSchema)
+
+  private def goldCount(base: String): Long =
+    spark.read.parquet(s"$base/gold").count()
+
+  test("incremental gold processes only new silver files per run") {
     val base = tmpDir("incgold")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.StringType)))
-
-    // the monitored dir holds FLAT snapshot files (one per day, like the
-    // reference's top_podcasts_YYYY-MM-DD.parquet layout)
-    def addSnapshot(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val scratch = tmpDir("snap")
-      df.coalesce(1).write.mode("overwrite").parquet(s"$scratch/out")
-      val part = new java.io.File(s"$scratch/out").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/silver"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$base/silver/$name"))
-    }
-
-    addSnapshot(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "day1.parquet")
-    val run1 = StreamingOps.incrementalGold(spark, s"$base/silver",
-      s"$base/gold", s"$base/ckpt", schema)
+    addSnapshot(base, Seq((1L, "a"), (2L, "b")), "day1.parquet")
+    val run1 = drain(base)
     assert(run1 == 2L)
 
-    addSnapshot(Seq((3L, "c")).toDF("k", "v"), "day2.parquet")
-    val run2 = StreamingOps.incrementalGold(spark, s"$base/silver",
-      s"$base/gold", s"$base/ckpt", schema)
+    addSnapshot(base, Seq((3L, "c")), "day2.parquet")
+    val run2 = drain(base)
     assert(run2 == 1L) // only the new file — not the O(history) re-read
 
-    val gold = spark.read.parquet(s"$base/gold")
-    assert(gold.count() == 3)
+    assert(goldCount(base) == 3)
+  }
+
+  test("incremental gold: a drain with no new silver file appends 0") {
+    val base = tmpDir("incgold_idle")
+    addSnapshot(base, Seq((1L, "a"), (2L, "b")), "day1.parquet")
+    assert(drain(base) == 2L)
+    assert(drain(base) == 0L)
+    assert(goldCount(base) == 2)
+  }
+
+  test("incremental gold: a batch replayed after a lost commit counts 0") {
+    val base = tmpDir("incgold_replay")
+    addSnapshot(base, Seq((1L, "a"), (2L, "b")), "day1.parquet")
+    assert(drain(base) == 2L)
+    addSnapshot(base, Seq((3L, "c")), "day2.parquet")
+    assert(drain(base) == 1L)
+    // lose the newest commit: the restarted query re-runs that batch,
+    // which the sink already holds and skips
+    val commits = new java.io.File(s"$base/ckpt/commits")
+    val newest = commits.listFiles().map(_.getName)
+      .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    new java.io.File(commits, newest).delete()
+    new java.io.File(commits, s".$newest.crc").delete()
+    assert(drain(base) == 0L)
+    assert(goldCount(base) == 3)
+    // the next new file is counted again
+    addSnapshot(base, Seq((4L, "d"), (5L, "e")), "day3.parquet")
+    assert(drain(base) == 2L)
+    assert(goldCount(base) == 5)
+  }
+
+  test("incremental gold: a gold dir with no committed parquet still drains") {
+    val base = tmpDir("incgold_empty")
+    // a prior run died between creating the sink dir and its first commit
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$base/gold/_spark_metadata"))
+    addSnapshot(base, Seq((1L, "a"), (2L, "b")), "day1.parquet")
+    assert(drain(base) == 2L)
+    assert(goldCount(base) == 2)
   }
 
   test("gold upsert stream replaces a restated partition, appends new ones") {

@@ -46,4 +46,41 @@ class PodchartSourceSpec extends SparkSpec {
     assert(chart.filter(col("region") === "de" && col("rank") === 1)
       .select("episodeName").head().getString(0) == "Morning News Daily")
   }
+
+  test("a session-level Hadoop setting reaches the executor-side read") {
+    // the scheme resolves only through the session conf: with the FS
+    // cache off, a read under any other conf finds no FileSystem for it
+    val settings = Seq(
+      "fs.pctest.impl" -> classOf[PctestFileSystem].getName,
+      "fs.pctest.impl.disable.cache" -> "true")
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val raw = spark.read.format("podchart").load(s"pctest://$fixtureDir")
+      val rows = raw.collect()
+      assert(rows.map(_.getString(1)).sorted.toSeq == Seq("de", "us"))
+      assert(rows.forall(_.getString(2) == resource("chart_us.json")))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("the reader factory ships a broadcast handle, not a Hadoop conf") {
+    val factory = new PodchartScanBuilder(fixtureDir,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .createReaderFactory()
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(factory)
+    out.close()
+    // a serialized session Hadoop conf alone is over 100 KB
+    assert(bytes.size < 4096, s"factory serializes to ${bytes.size} bytes")
+  }
+}
+
+/** The local filesystem under a `pctest:` scheme. */
+class PctestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("pctest:///")
+  override def getScheme: String = "pctest"
 }
