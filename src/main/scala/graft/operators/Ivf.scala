@@ -71,47 +71,65 @@ object Ivf {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
 
+  /** The in-row argmin shared by [[assignEnergyExpr]] and
+    * [[cellHealth]]: fold `cents` — ARRAY<STRUCT<cid: BIGINT, cent:
+    * ARRAY<DOUBLE>>>, a plan literal or a broadcast column — keeping
+    * the running min(struct(d2, cid, cent)). The fold starts from null,
+    * so the first candidate always enters and every later one replaces
+    * it only if strictly smaller: exactly the `min` aggregate's
+    * semantics, so (d2 asc, cid asc) is the tie rule (distinct cids make
+    * every comparison decisive; the trailing cent never orders) and a
+    * distance of any magnitude still lands in a real cell. Carrying the
+    * winner's centroid lets the residual energy compute in the same row
+    * without a codebook re-probe. A vector whose length differs from a
+    * centroid's — a null vector included — raises instead of folding a
+    * truncated distance ([[VectorFunctions.dot]] reads the shorter
+    * length), and so does an empty codebook, which has no cell to land
+    * in. `qvec` must be the [[quantize]]d vector. */
+  private def nearest(qvec: Column, cents: Column): Column =
+    when(size(cents) > 0, aggregate(cents,
+      lit(null).cast("struct<d2:double,cid:bigint,cent:array<double>>"),
+      (acc, c) => {
+        val cent = c.getField("cent")
+        val cand = struct(
+          when(size(qvec) === size(cent), dist2(qvec, cent))
+            .otherwise(raise_error(concat(lit("IVF: vector length "),
+              coalesce(size(qvec).cast("string"), lit("NULL")),
+              lit(" != centroid dim "), size(cent).cast("string"))))
+            .as("d2"),
+          c.getField("cid").as("cid"),
+          cent.as("cent"))
+        when(acc.isNull || cand < acc, cand).otherwise(acc)
+      })).otherwise(raise_error(lit("IVF: empty codebook")))
+
+  /** Floor-residual energy of `qvec` against its cell's centroid:
+    * Σ floor(x − cent)², cast to BIGINT per row so sums stay exact. The
+    * left-to-right double fold is [[VectorFunctions.dot]] of the
+    * residual with itself, without building the residual twice. */
+  private def residualEnergy(qvec: Column, cent: Column): Column =
+    aggregate(zip_with(qvec.cast("array<double>"), cent,
+        (x, c) => floor(x - c).cast("double")),
+      lit(0.0), (acc, r) => acc + r * r).cast("long")
+
   /** IN-ROW coarse assignment + floor-residual energy against a
     * LITERAL centroid list — struct(cid, energy), the per-row half of
     * [[cellHealth]] as a pure projection: no cross-fan, no argmin
     * aggregation, no exchange, which is what lets a STREAM score
     * arriving vectors statelessly (per-vector groupBy state would be
-    * unbounded) and a batch path skip the assignment shuffle
-    * entirely. The fold keeps the full (d2, cid, cent) running-min
-    * struct — (d2, cid) decides (distinct cids make every comparison
-    * decisive, so the trailing cent never participates in the
-    * ordering), and carrying the winner's centroid lets the residual
-    * energy compute in the same row without a codebook re-probe.
-    * Energy is exactly [[cellHealth]]'s: Σ floor(x − cent)², cast to
-    * BIGINT per row. `qvec` must be the [[quantize]]d vector. The
-    * `best` struct is referenced twice (cid + energy), so the k
-    * distance evaluations may run twice per row — bounded by k,
-    * the same order as the batch cross-fan's per-row work. */
+    * unbounded). The fold is [[nearest]]'s, so cid and energy are
+    * exactly [[cellHealth]]'s. The `best` struct is referenced twice
+    * (cid + energy), so the k distance evaluations may run twice per
+    * row — bounded by k. */
   def assignEnergyExpr(qvec: Column,
       cents: Seq[(Long, Seq[Double])]): Column = {
     require(cents.nonEmpty, "assignEnergyExpr needs >= 1 centroid")
     val d = cents.head._2.size
     require(cents.forall(_._2.size == d),
       "ragged centroid list in assignEnergyExpr")
-    val guarded = when(size(qvec) === d, qvec)
-      .otherwise(raise_error(concat(
-        lit("IVF: vector length "), size(qvec),
-        lit(s" != $d = centroid dim of the literal codebook"))))
-    val best = aggregate(typedLit(cents),
-      struct(lit(Double.MaxValue).as("d2"),
-        lit(Long.MaxValue).as("cid"),
-        typedLit(Seq.empty[Double]).as("cent")),
-      (acc, c) => {
-        val cand = struct(
-          dist2(guarded, c.getField("_2")).as("d2"),
-          c.getField("_1").as("cid"),
-          c.getField("_2").as("cent"))
-        when(cand < acc, cand).otherwise(acc)
-      })
-    val res = zip_with(guarded.cast("array<double>"),
-      best.getField("cent"), (x, c) => floor(x - c))
+    val best = nearest(qvec, typedLit(cents)
+      .cast("array<struct<cid:bigint,cent:array<double>>>"))
     struct(best.getField("cid").as("cid"),
-      VectorFunctions.dot(res, res).cast("long").as("energy"))
+      residualEnergy(qvec, best.getField("cent")).as("energy"))
   }
 
   /** Mean of assigned vectors per centroid, element-wise. Exact integer
@@ -185,38 +203,36 @@ object Ivf {
     * encode, so a high-energy cell predicts poor codes and signals
     * re-training or a k bump). Residuals floor to the integral grid,
     * each row's energy casts to BIGINT before the sum, so the totals
-    * are exact longs and hash-gate. The codebook spine left-joins so
-    * EMPTY cells report (0, 0, 0) instead of vanishing — the
-    * imbalance signal is the point. One broadcast-codebook pass over
-    * the vectors; the argmin exchange carries three scalars per
-    * vector, then cell keys. Output: (cid, n_vectors,
+    * are exact longs and hash-gate. Every centroid adds a zero row to
+    * the same per-cell sums, so EMPTY cells report (0, 0, 0) instead
+    * of vanishing — the imbalance signal is the point. The codebook
+    * gathers lazily into ONE broadcast row (k centroids) and each
+    * vector folds over it IN-ROW ([[nearest]]: the argmin and the
+    * winner's energy in the same row), so no vec_id-keyed exchange
+    * exists: the only exchange over the vectors carries the per-(task,
+    * cell) partials of the cell sums. Output: (cid, n_vectors,
     * residual_energy, avg_residual_energy). */
   def cellHealth(codebook: DataFrame, vectors: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    // the energy is computed IN the assignment cross-fan and rides
-    // the argmin struct, so the vec_id exchange carries three scalars
-    // per vector — never the 64-element vector (the assignIds payload
-    // discipline); the per-candidate zip_with is map-side work
-    // bounded by k, the right trade against shipping arrays
-    val energies = quantized(vectors, idCol, vecCol)
-      .crossJoin(broadcast(codebook))
-      .withColumn("d2", dist2(col("qvec"), col("cent")))
-      .withColumn("__r",
-        zip_with(col("qvec").cast("array<double>"), col("cent"),
-          (x, c) => floor(x - c)))
-      .withColumn("__e",
-        VectorFunctions.dot(col("__r"), col("__r")).cast("long"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cid"), col("__e"))).as("__m"))
-      .select(col("__m.cid").as("cid"), col("__m.__e").as("__e"))
+    val cents = codebook.agg(collect_list(struct(
+      col("cid").cast("long").as("cid"),
+      col("cent").cast("array<double>").as("cent"))).as("__cb"))
+    val scored = quantized(vectors, idCol, vecCol)
+      .select(col("qvec").cast("array<double>").as("qvec"))
+      .crossJoin(broadcast(cents))
+      .select(col("qvec"), nearest(col("qvec"), col("__cb")).as("__b"))
+      .select(col("__b.cid").as("cid"), lit(1L).as("__n"),
+        residualEnergy(col("qvec"), col("__b.cent")).as("__e"))
+    // the spine is a zero row per centroid in the same sum, not a left
+    // join: an equi-join would infer isnotnull(cid) on the scored side
+    // and push it into the cross join's condition, running the fold
+    // twice per vector
+    codebook.select(col("cid").cast("long").as("cid"), lit(0L).as("__n"),
+        lit(0L).as("__e"))
+      .unionByName(scored)
       .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_vectors"),
+      .agg(sum(col("__n")).as("n_vectors"),
         sum(col("__e")).as("residual_energy"))
-    codebook.select(col("cid"))
-      .join(energies, Seq("cid"), "left")
-      .select(col("cid"),
-        coalesce(col("n_vectors"), lit(0L)).as("n_vectors"),
-        coalesce(col("residual_energy"), lit(0L)).as("residual_energy"))
       .withColumn("avg_residual_energy",
         when(col("n_vectors") > 0,
           expr("residual_energy DIV n_vectors")).otherwise(lit(0L)))

@@ -75,8 +75,9 @@ class PlanAuditSpec extends SparkSpec {
       // path is equi-joins only)
       "q197_residual_pq_index_append",
       // q198/q202's assignment fans the ≤8-row codebook — q36/q110's
-      // class; the health aggregates exchange per-vector scalars then
-      // cell keys, and q202's ledger merge is ledger-sized
+      // class; the argmin folds in-row against the one broadcast
+      // codebook row, the health aggregate exchanges per-(task, cell)
+      // partials, and q202's ledger merge is ledger-sized
       "q198_ann_index_health", "q202_incremental_index_health",
       // q211 runs q198's cellHealth fan twice (stored build + the
       // O(deleted) retraction score) — same ≤8-row codebook class;

@@ -267,6 +267,49 @@ class PqSpec extends SparkSpec {
       val (pn, pe) = prior(cid); n >= pn && e >= pe })
   }
 
+  test("cellHealth: an equidistant vector goes to the lower cid, as the argmin aggregate; no vec_id exchange") {
+    val s = spark
+    import s.implicits._
+    // the origin is 10¹² (quantized units²) from both centroids; both
+    // codebook orders, so the order the fold visits them cannot decide
+    val vecs = Seq((0L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val a = (7L, Array(1e6, 0.0, 0.0, 0.0))
+    val b = (3L, Array(0.0, 1e6, 0.0, 0.0))
+    for (cb <- Seq(Seq(a, b), Seq(b, a)).map(_.toDF("cid", "cent"))) {
+      val health = Ivf.cellHealth(cb, vecs, "vec_id", "embedding")
+      val got = health.collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got == Map(3L -> (1L, 1000000000000L), 7L -> (0L, 0L)),
+        s"tie not broken to the lower cid: $got")
+      // the min(struct(d2, cid)) aggregate the in-row fold replaced
+      val argmin = Ivf.assignIds(Ivf.quantized(vecs, "vec_id", "embedding"),
+        cb).collect().map(_.getLong(1)).toSeq
+      assert(argmin == Seq(3L))
+      val plan = health.queryExecution.executedPlan.toString
+      assert(!plan.contains("hashpartitioning(vec_id"),
+        s"cellHealth exchanged on vec_id:\n$plan")
+    }
+  }
+
+  test("cellHealth: a wrong-length or null vector raises instead of landing in a cell") {
+    val s = spark
+    import s.implicits._
+    val cb = Seq((0L, Array(0.0, 0.0, 0.0, 0.0)), (1L, Array(1e6, 0.0, 0.0, 0.0)))
+      .toDF("cid", "cent")
+    val short = Seq((0L, Array(1f, 2f, 3f))).toDF("vec_id", "embedding")
+    val e = intercept[Exception] {
+      Ivf.cellHealth(cb, short, "vec_id", "embedding").collect()
+    }
+    assert(e.getMessage.contains("vector length 3 != centroid dim 4"),
+      s"wrong failure: ${e.getMessage}")
+    val nul = Seq((0L, null: Array[Float])).toDF("vec_id", "embedding")
+    val en = intercept[Exception] {
+      Ivf.cellHealth(cb, nul, "vec_id", "embedding").collect()
+    }
+    assert(en.getMessage.contains("vector length NULL"),
+      s"wrong failure: ${en.getMessage}")
+  }
+
   test("encodeCodesExpr ≡ encode: literal-codebook in-row codes match") {
     // the stateless streaming encoder must reproduce the aggregate
     // argmin bit-for-bit — same least-struct tie-break, same
