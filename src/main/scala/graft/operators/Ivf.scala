@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
@@ -17,7 +18,8 @@ import graft.functions.VectorFunctions
   *    order-independent and centroid means are identical in any engine;
   *  - distances use the expanded form |q|² − 2q·c + |c|² with ordered
   *    dot-product folds (bit-equal to DuckDB's list_dot_product);
-  *  - every argmin carries a centroid-id tie-break;
+  *  - every nearest-centroid assignment, here and in [[Pq]], is ONE
+  *    in-row fold ([[nearest]]) with a centroid-id tie-break;
   *  - initialization is the k smallest vec_ids (deterministic, not
   *    kmeans++ — this is a codebook demo, not a quality benchmark).
   */
@@ -27,7 +29,7 @@ object Ivf {
   def quantize(vec: Column): Column =
     transform(VectorFunctions.asDouble(vec), x => floor(x * lit(1000000.0)))
 
-  private def dist2(q: Column, c: Column): Column =
+  private[operators] def dist2(q: Column, c: Column): Column =
     VectorFunctions.dot(q, q) - lit(2.0) * VectorFunctions.dot(q, c) +
       VectorFunctions.dot(c, c)
 
@@ -36,32 +38,20 @@ object Ivf {
     embeddings.select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("qvec"))
 
   /** Assign every vector to its nearest centroid (cid tie-break).
-    * centroids: (cid, cent). Output: (vec_id, qvec, cid, d2).
-    *
-    * The argmin is a `min(struct(d2, cid, qvec))` aggregation — struct
-    * ordering is lexicographic by field, so (d2 asc, cid asc) is
-    * exactly the tie-broken nearest — rather than a per-vector
-    * row_number window: the aggregate partial-combines map-side, so
-    * the exchange carries n rows, not the n·k expanded assignment
-    * (the window form shuffles all n·k before sorting). */
+    * centroids: (cid, cent). Output: (vec_id, qvec, cid, d2), cid in
+    * the codebook's own type. The argmin is [[withNearest]]'s in-row
+    * fold, so the only exchange is the codebook's gather (k rows) and
+    * the vector never leaves its row. Input is keyed by vec_id: every
+    * input row comes out as one assigned row, duplicates included. */
   def assign(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    vectors.crossJoin(broadcast(centroids))
-      .withColumn("d2", dist2(col("qvec"), col("cent")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cid"), col("qvec"))).as("__m"))
-      .select(col("vec_id"), col("__m.qvec").as("qvec"),
-        col("__m.cid").as("cid"), col("__m.d2").as("d2"))
+    withNearest(vectors, centroids, "qvec")
+      .select(col("vec_id"), col("qvec"), col("__cid").as("cid"),
+        col("__d2").as("d2"))
 
-  /** [[assign]] for consumers that need only the cluster id: the
-    * argmin struct carries (d2, cid) — NOT the 64-element vector, which
-    * is ~20× the payload — through the exchange. Output: (vec_id, cid,
-    * d2). */
+  /** [[assign]] for consumers that need only the cluster id. Output:
+    * (vec_id, cid, d2); input is keyed by vec_id. */
   def assignIds(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    vectors.crossJoin(broadcast(centroids))
-      .withColumn("d2", dist2(col("qvec"), col("cent")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cid"))).as("__m"))
-      .select(col("vec_id"), col("__m.cid").as("cid"), col("__m.d2").as("d2"))
+    assign(vectors, centroids).select(col("vec_id"), col("cid"), col("d2"))
 
   /** Collect a coarse codebook into [[assignEnergyExpr]]'s driver-side
     * shape — k rows, the bounded-action class (the
@@ -71,36 +61,103 @@ object Ivf {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
 
-  /** The in-row argmin shared by [[assignEnergyExpr]] and
-    * [[cellHealth]]: fold `cents` — ARRAY<STRUCT<cid: BIGINT, cent:
-    * ARRAY<DOUBLE>>>, a plan literal or a broadcast column — keeping
-    * the running min(struct(d2, cid, cent)). The fold starts from null,
-    * so the first candidate always enters and every later one replaces
-    * it only if strictly smaller: exactly the `min` aggregate's
-    * semantics, so (d2 asc, cid asc) is the tie rule (distinct cids make
-    * every comparison decisive; the trailing cent never orders) and a
-    * distance of any magnitude still lands in a real cell. Carrying the
-    * winner's centroid lets the residual energy compute in the same row
-    * without a codebook re-probe. A vector whose length differs from a
-    * centroid's — a null vector included — raises instead of folding a
-    * truncated distance ([[VectorFunctions.dot]] reads the shorter
-    * length), and so does an empty codebook, which has no cell to land
-    * in. `qvec` must be the [[quantize]]d vector. */
-  private def nearest(qvec: Column, cents: Column): Column =
+  /** THE nearest-centroid argmin of this file and [[Pq]]: fold `cents`
+    * — ARRAY<STRUCT<cid, cent: ARRAY<DOUBLE>, cc: DOUBLE>> with cid of
+    * type `cidType` and cc = |cent|², a plan literal ([[centroidList]])
+    * or a broadcast column ([[withNearest]]) — keeping the running
+    * minimum of struct(d2, cid, cent). The best-so-far starts null, so
+    * the first candidate always enters and every later one replaces it
+    * only if strictly smaller: exactly the `min` aggregate's semantics,
+    * so (d2 asc, cid asc) is the tie rule (distinct cids make every
+    * comparison decisive; the trailing cent never orders) and a
+    * distance of any magnitude still lands in a real cell. The
+    * accumulator also carries the vector as doubles and |q|², so each
+    * candidate costs one dot product; d2 = |q|² − 2q·c + |c|² adds the
+    * same three doubles in the same order as [[dist2]], bit for bit.
+    * Carrying the winner's centroid lets a residual compute in the
+    * same row without a codebook re-probe. A vector whose length
+    * differs from a centroid's — a null vector included — raises
+    * instead of folding a truncated distance ([[VectorFunctions.dot]]
+    * reads the shorter length), and so does an empty codebook, which
+    * has no cell to land in. `qvec` must be integral-grid
+    * ([[quantize]]d, or a floored residual). */
+  private[operators] def nearest(qvec: Column, cents: Column,
+      cidType: DataType): Column = {
+    val best = new StructType().add("d2", DoubleType).add("cid", cidType)
+      .add("cent", ArrayType(DoubleType))
+    val q0 = qvec.cast("array<double>")
     when(size(cents) > 0, aggregate(cents,
-      lit(null).cast("struct<d2:double,cid:bigint,cent:array<double>>"),
+      struct(lit(null).cast(best).as("best"), q0.as("q"),
+        VectorFunctions.dot(q0, q0).as("qq")),
       (acc, c) => {
+        val q = acc.getField("q")
         val cent = c.getField("cent")
         val cand = struct(
-          when(size(qvec) === size(cent), dist2(qvec, cent))
+          when(size(q) === size(cent), acc.getField("qq") -
+              lit(2.0) * VectorFunctions.dot(q, cent) + c.getField("cc"))
             .otherwise(raise_error(concat(lit("IVF: vector length "),
-              coalesce(size(qvec).cast("string"), lit("NULL")),
+              coalesce(size(q).cast("string"), lit("NULL")),
               lit(" != centroid dim "), size(cent).cast("string"))))
             .as("d2"),
           c.getField("cid").as("cid"),
           cent.as("cent"))
-        when(acc.isNull || cand < acc, cand).otherwise(acc)
-      })).otherwise(raise_error(lit("IVF: empty codebook")))
+        val b = acc.getField("best")
+        struct(when(b.isNull || cand < b, cand).otherwise(b).as("best"),
+          q.as("q"), acc.getField("qq").as("qq"))
+      },
+      acc => acc.getField("best")))
+      .otherwise(raise_error(lit("IVF: empty codebook")))
+  }
+
+  /** A driver-side (cid, cent) list as the plan literal [[nearest]]
+    * folds over. |cent|² is summed left to right from 0.0, the loop of
+    * [[VectorFunctions.dot]], so the literal path's distances are
+    * bit-equal to the broadcast path's. */
+  private[operators] def centroidList(cents: Seq[(Long, Seq[Double])])
+      : Seq[(Long, Seq[Double], Double)] =
+    cents.map { case (cid, c) =>
+      (cid, c, c.foldLeft(0.0)((s, x) => s + x * x))
+    }
+
+  /** The Spark type of one [[centroidList]] entry, as [[nearest]]
+    * names its fields. */
+  private[operators] val centroidType =
+    "struct<cid:bigint,cent:array<double>,cc:double>"
+
+  /** `rows` with the [[nearest]] centroid of their `vec` column as
+    * three more columns, `__cid`, `__d2` and `__cent` — the one
+    * assignment path of [[assign]], [[flatIndex]], [[cellHealth]] and
+    * Pq's subspace assignment. The codebook (cid, cent) gathers into
+    * ONE row per `keys` group (none: the whole codebook; Pq: one per
+    * subspace), which broadcasts onto `rows` — a cross join without
+    * keys, an equi-join on them — and each row folds over its group's
+    * list in place. No exchange is keyed by the row id, every other
+    * column of `rows` stays on its own row, and no row is collapsed:
+    * input is keyed by its row id.
+    *
+    * `__cid` is declared non-null (a null codebook cid raises): a
+    * caller's equi-join on the cell would otherwise infer
+    * isnotnull(cid) and push it into the broadcast join's condition,
+    * running the fold twice per row. */
+  private[operators] def withNearest(rows: DataFrame, codebook: DataFrame,
+      vec: String, keys: String*): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+    import org.apache.spark.sql.graft.Bridge
+    val cent = col("cent").cast("array<double>")
+    val cb = codebook.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("cid"), cent.as("cent"),
+        VectorFunctions.dot(cent, cent).as("cc"))).as("__cb"))
+    val joined =
+      if (keys.isEmpty) rows.crossJoin(broadcast(cb))
+      else rows.join(broadcast(cb), keys)
+    val folded = joined.withColumn("__b",
+        nearest(col(vec), col("__cb"), codebook.schema("cid").dataType))
+      .drop("__cb")
+    folded.select(folded.columns.filter(_ != "__b").map(folded.col) ++ Seq(
+      Bridge.column(AssertNotNull(Bridge.expression(col("__b.cid")),
+        Seq("IVF: centroid id"))).as("__cid"),
+      col("__b.d2").as("__d2"), col("__b.cent").as("__cent")): _*)
+  }
 
   /** Floor-residual energy of `qvec` against its cell's centroid:
     * Σ floor(x − cent)², cast to BIGINT per row so sums stay exact. The
@@ -113,8 +170,8 @@ object Ivf {
 
   /** IN-ROW coarse assignment + floor-residual energy against a
     * LITERAL centroid list — struct(cid, energy), the per-row half of
-    * [[cellHealth]] as a pure projection: no cross-fan, no argmin
-    * aggregation, no exchange, which is what lets a STREAM score
+    * [[cellHealth]] as a pure projection: no join, no aggregation,
+    * no exchange, which is what lets a STREAM score
     * arriving vectors statelessly (per-vector groupBy state would be
     * unbounded). The fold is [[nearest]]'s, so cid and energy are
     * exactly [[cellHealth]]'s. The `best` struct is referenced twice
@@ -126,8 +183,8 @@ object Ivf {
     val d = cents.head._2.size
     require(cents.forall(_._2.size == d),
       "ragged centroid list in assignEnergyExpr")
-    val best = nearest(qvec, typedLit(cents)
-      .cast("array<struct<cid:bigint,cent:array<double>>>"))
+    val best = nearest(qvec,
+      typedLit(centroidList(cents)).cast(s"array<$centroidType>"), LongType)
     struct(best.getField("cid").as("cid"),
       residualEnergy(qvec, best.getField("cent")).as("energy"))
   }
@@ -176,10 +233,11 @@ object Ivf {
       cents = recompute(assign(vectors, cents))
     // EAGER localCheckpoint, not persist (r19): the codebook is k rows
     // (the bounded driver-action class), but its PLAN is the whole
-    // k-means chain — scan + 2·(cross-fan + argmin agg + recompute) —
-    // and every consumer embeds that subtree (probe selection, base
-    // assignment, residual builds), so each downstream analysis pass
-    // and every AQE per-stage re-optimization re-walks it. Truncating
+    // k-means chain — scan + 2·(codebook gather + in-row fold +
+    // recompute) — and every consumer embeds that subtree (probe
+    // selection, base assignment, residual builds), so each downstream
+    // analysis pass and every AQE per-stage re-optimization re-walks
+    // it. Truncating
     // to an RDD leaf costs one tiny job here and shrinks every
     // downstream plan; the cache-reuse benefit of persist is kept
     // (checkpoint blocks serve all consumers).
@@ -187,8 +245,9 @@ object Ivf {
   }
 
   /** Occupancy census of `vectors` against a FIXED codebook: one
-    * broadcast-codebook pass, id-only argmin ([[assignIds]] — the
-    * vector never crosses the exchange). Output: (cid, countAs). */
+    * broadcast-codebook pass, the in-row [[assignIds]] fold, so the
+    * only exchange over the vectors carries per-(task, cell) partial
+    * counts. Output: (cid, countAs). */
   def occupancy(codebook: DataFrame, vectors: DataFrame, idCol: String,
       vecCol: String, countAs: String): DataFrame =
     assignIds(quantized(vectors, idCol, vecCol), codebook)
@@ -205,28 +264,22 @@ object Ivf {
     * each row's energy casts to BIGINT before the sum, so the totals
     * are exact longs and hash-gate. Every centroid adds a zero row to
     * the same per-cell sums, so EMPTY cells report (0, 0, 0) instead
-    * of vanishing — the imbalance signal is the point. The codebook
-    * gathers lazily into ONE broadcast row (k centroids) and each
-    * vector folds over it IN-ROW ([[nearest]]: the argmin and the
-    * winner's energy in the same row), so no vec_id-keyed exchange
-    * exists: the only exchange over the vectors carries the per-(task,
-    * cell) partials of the cell sums. Output: (cid, n_vectors,
-    * residual_energy, avg_residual_energy). */
+    * of vanishing — the imbalance signal is the point. Each vector
+    * folds IN-ROW over the broadcast codebook row ([[withNearest]]: the
+    * argmin and the winner's energy in the same row), so no
+    * vec_id-keyed exchange exists: the only exchange over the vectors
+    * carries the per-(task, cell) partials of the cell sums. Output:
+    * (cid, n_vectors, residual_energy, avg_residual_energy), cid
+    * BIGINT. */
   def cellHealth(codebook: DataFrame, vectors: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val cents = codebook.agg(collect_list(struct(
-      col("cid").cast("long").as("cid"),
-      col("cent").cast("array<double>").as("cent"))).as("__cb"))
-    val scored = quantized(vectors, idCol, vecCol)
-      .select(col("qvec").cast("array<double>").as("qvec"))
-      .crossJoin(broadcast(cents))
-      .select(col("qvec"), nearest(col("qvec"), col("__cb")).as("__b"))
-      .select(col("__b.cid").as("cid"), lit(1L).as("__n"),
-        residualEnergy(col("qvec"), col("__b.cent")).as("__e"))
+    val scored = withNearest(quantized(vectors, idCol, vecCol)
+        .select(col("qvec").cast("array<double>").as("qvec")),
+        codebook, "qvec")
+      .select(col("__cid").cast("long").as("cid"), lit(1L).as("__n"),
+        residualEnergy(col("qvec"), col("__cent")).as("__e"))
     // the spine is a zero row per centroid in the same sum, not a left
-    // join: an equi-join would infer isnotnull(cid) on the scored side
-    // and push it into the cross join's condition, running the fold
-    // twice per vector
+    // join: one aggregate covers empty cells too
     codebook.select(col("cid").cast("long").as("cid"), lit(0L).as("__n"),
         lit(0L).as("__e"))
       .unionByName(scored)
@@ -331,8 +384,6 @@ object Ivf {
       nprobe: Int): DataFrame = {
     val cents = centroids(embeddings, idCol, vecCol, numCentroids, iterations)
     val vectors = quantized(embeddings, idCol, vecCol)
-    // id-only argmin: the base assignment never needs the vector, so
-    // don't ship 64 elements per row through the exchange
     val assigned = assignIds(vectors, cents).select(col("vec_id"), col("cid"))
 
     val wProbe = Window.partitionBy(col("vec_id"))
@@ -396,26 +447,17 @@ object Ivf {
     * The attributes live IN the index row on purpose: at query time a
     * predicate becomes a plain column filter on the index scan (plus
     * parquet pushdown once the table persists), never a join back to
-    * the corpus. One exchange total: attributes ride the same argmin
-    * aggregate as the assignment (the [[assign]] struct form — the
-    * (d2, cid) prefix is unique per vector, so the trailing payload
-    * fields never influence the min), rather than a second
-    * corpus-keyed join to fetch them afterwards. Output:
-    * (vec_id, cid, qvec, attrs*). */
+    * the corpus. The assignment is [[withNearest]]'s in-row fold, so
+    * the vector and its attributes never leave their row: no
+    * corpus-keyed exchange builds the index. Input is keyed by
+    * `idCol`. Output: (vec_id, cid, qvec, attrs*). */
   def flatIndex(coarse: DataFrame, embeddings: DataFrame, idCol: String,
-      vecCol: String, attrCols: Seq[String]): DataFrame = {
-    val attrs = attrCols.map(col)
-    val v = embeddings.select(col(idCol).as("vec_id") +:
-      quantize(col(vecCol)).as("qvec") +: attrs: _*)
-    v.crossJoin(broadcast(coarse))
-      .withColumn("__d2", dist2(col("qvec"), col("cent")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("__d2") +: col("cid") +: col("qvec") +:
-        attrs: _*)).as("__m"))
-      .select(col("vec_id") +: col("__m.cid").as("cid") +:
-        col("__m.qvec").as("qvec") +:
-        attrCols.map(a => col(s"__m.$a").as(a)): _*)
-  }
+      vecCol: String, attrCols: Seq[String]): DataFrame =
+    withNearest(embeddings.select(col(idCol).as("vec_id") +:
+        quantize(col(vecCol)).as("qvec") +: attrCols.map(col): _*),
+      coarse, "qvec")
+      .select(col("vec_id") +: col("__cid").as("cid") +: col("qvec") +:
+        attrCols.map(col): _*)
 
   /** FILTERED IVF-Flat search — attribute-predicated retrieval, the
     * seam every production vector store exposes ("nearest neighbors

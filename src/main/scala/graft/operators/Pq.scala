@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Product quantization (PQ) — the Jégou/Douze/Schmid "Product
   * Quantization for Nearest Neighbor Search" compression tier of the
@@ -16,15 +17,17 @@ import org.apache.spark.sql.functions._
   * over subspaces.
   *
   * Scale shape, stage by stage:
+  *  - assignment: every subvector row equi-joins its subspace's
+  *    codebook, gathered into one broadcast row per subspace, and
+  *    folds over it in place — [[Ivf.nearest]], the one argmin of the
+  *    IVF and PQ code — so no exchange is keyed by (vec_id, sub);
   *  - training: subvector rows are m× the corpus but all m subspace
   *    k-means run JOINTLY (one assign + one recompute job per Lloyd
   *    round for every subspace — centroids key by (sub, cid)), with
-  *    the [[Ivf.assign]] disciplines intact: broadcast codebook,
-  *    map-side argmin via min(struct(d2, cid)), native VecSumAgg
-  *    partial sums on the recompute exchange;
-  *  - encoding: one broadcast-codebook pass, the argmin struct carries
-  *    (d2, cid) only; codes fold to one m-length array per vector —
-  *    the stored index row;
+  *    native VecSumAgg partial sums on the recompute exchange;
+  *  - encoding: one broadcast-codebook pass; codes fold to one
+  *    m-length array per vector — the stored index row — on the one
+  *    vec_id-keyed exchange;
   *  - search: the per-query distance TABLE (m·k doubles per query) is
   *    aggregated to one map column and broadcast; scoring each base
   *    vector is then m integer-keyed map lookups summed in fixed
@@ -58,8 +61,8 @@ object Pq {
     vecs
       .select(col("vec_id") +:
         when(size(col("qvec")) % m === 0, col("qvec"))
-          .otherwise(raise_error(concat(
-            lit("PQ: vector length "), size(col("qvec")),
+          .otherwise(raise_error(concat(lit("PQ: vector length "),
+            coalesce(size(col("qvec")).cast("string"), lit("NULL")),
             lit(s" is not divisible by m=$m subspaces"))))
           .as("qvec") +:
         explode(sequence(lit(0), lit(m - 1))).as("sub") +:
@@ -70,33 +73,17 @@ object Pq {
         attrCols.map(col): _*)
   }
 
-  private def dist2(q: Column, c: Column): Column =
-    graft.functions.VectorFunctions.dot(q, q) -
-      lit(2.0) * graft.functions.VectorFunctions.dot(q, c) +
-      graft.functions.VectorFunctions.dot(c, c)
-
-  /** Nearest (sub, cid) per subvector against a broadcast codebook —
-    * the [[Ivf.assign]] aggregate-argmin, keyed by (vec_id, sub).
-    * `withVec` keeps the subvector on the row (training recompute
-    * needs it; encoding doesn't, and drops ~16× the payload). */
+  /** Nearest (sub, cid) per subvector row: [[Ivf.withNearest]] keyed
+    * by `sub`, so each row folds over its own subspace's codebook in
+    * place. Input is keyed by (vec_id, sub). Output: (vec_id, sub, cid,
+    * d2[, svec], attrs*) — `withVec` keeps the subvector (training
+    * recompute needs it; encoding doesn't). */
   private def assign(sv: DataFrame, cbs: DataFrame,
-      withVec: Boolean, attrCols: Seq[String] = Nil): DataFrame = {
-    val joined = sv.join(broadcast(cbs), Seq("sub"))
-      .withColumn("d2", dist2(col("svec"), col("cent")))
-    // attrs trail the (d2, cid) prefix, which is unique per group key
-    // (one d2 per cid, cids distinct), so payload never decides the
-    // min — the Ivf.flatIndex argmin-payload argument verbatim
-    val payload = (if (withVec) Seq(col("svec")) else Nil) ++
-      attrCols.map(col)
-    val m = min(struct(col("d2") +: col("cid") +: payload: _*)).as("__m")
-    val agg = joined.groupBy(col("vec_id"), col("sub")).agg(m)
-    // d2 rides the argmin struct anyway — exposing it is free, and
-    // quantizationError consumes it (other callers just drop it)
-    val vecOut = if (withVec) Seq(col("__m.svec").as("svec")) else Nil
-    agg.select(col("vec_id") +: col("sub") +: col("__m.cid").as("cid") +:
-      col("__m.d2").as("d2") +: (vecOut ++
-        attrCols.map(a => col(s"__m.$a").as(a))): _*)
-  }
+      withVec: Boolean, attrCols: Seq[String] = Nil): DataFrame =
+    Ivf.withNearest(sv, cbs, "svec", "sub")
+      .select(col("vec_id") +: col("sub") +: col("__cid").as("cid") +:
+        col("__d2").as("d2") +: ((if (withVec) Seq(col("svec")) else Nil)
+          ++ attrCols.map(col)): _*)
 
   /** Per-subspace codebooks (sub, cid, cent) by joint Lloyd iteration:
     * seeds are the `k` smallest vec_ids' subvectors (deterministic, the
@@ -174,9 +161,10 @@ object Pq {
     out
   }
 
-  /** Fold per-(vec, sub) assignments into the stored code row.
-    * Attrs are constant per vec_id (they rode the subvector explode),
-    * so the per-attr `min` is the identity — never a choice. */
+  /** Fold per-(vec, sub) assignments into the stored code row — the
+    * one vec_id-keyed exchange of an encode. Attrs are constant per
+    * vec_id (they rode the subvector explode), so the per-attr `min`
+    * is the identity — never a choice. */
   private def codesFrom(sv: DataFrame, cbs: DataFrame,
       attrCols: Seq[String] = Nil): DataFrame =
     assign(sv, cbs, withVec = false, attrCols)
@@ -198,17 +186,16 @@ object Pq {
     * (the one that actually serves at billion scale: m bytes/vector
     * instead of the flat index's full grid vector): language, source,
     * license — whatever predicates queries will carry — ride the
-    * subvector explode and both aggregates as constant payload, never
-    * a join back to the corpus. At query time a predicate becomes a
+    * subvector explode and the code-row aggregate as constant payload,
+    * never a join back to the corpus. At query time a predicate becomes a
     * plain column filter on the codes scan (plus parquet pushdown once
     * the table persists) BEFORE any scoring: `codes.filter(pred)` into
     * [[adcSearch]] restricts the exhaustive compressed scan, and the
     * same filtered frame as [[ivfPqSearch]]'s `assigned`/`codes` input
     * restricts candidates before the probe join — so selective
     * predicates never under-fill k (the classic post-filter ANN bug).
-    * Attr columns must be orderable (they ride `min` aggregates whose
-    * (d2, cid) prefix is unique, so the payload never decides).
-    * Output: (vec_id, codes, attrs*). */
+    * Attr columns must be orderable (they ride a per-vec_id `min`,
+    * the identity on a constant). Output: (vec_id, codes, attrs*). */
   def encodeIndexed(embeddings: DataFrame, idCol: String, vecCol: String,
       m: Int, cbs: DataFrame, attrCols: Seq[String]): DataFrame =
     codesFrom(
@@ -222,42 +209,30 @@ object Pq {
     * map-only form of [[encode]] for stateless streaming: the stored
     * codebook (k·m rows, BOUNDED — collecting it is the PageRank
     * node-count class of driver action, not a corpus collect) embeds
-    * in the plan as literals, so encoding is a pure codegen'd
-    * projection — no shuffle, no state store, Append-mode safe, which
-    * is exactly what an in-flight encode needs (a streaming groupBy
-    * re-derivation of [[encode]]'s aggregate argmin would carry
-    * unbounded per-vector state for no reason: all of a vector's
-    * subvectors live in its own row). Bit-identical to [[encode]]:
-    * least(struct(d2, cid)) is the same lexicographic argmin as the
-    * aggregate min, and the dot products fold left-to-right over the
-    * same doubles. `cbsLocal(s)` lists (cid, cent) for subspace s;
-    * `qvec` must be the quantized integral-grid vector of EXACTLY
-    * m·dsub dims — enforced per row, mirroring [[subvectorsOf]]'s
-    * guard: a shorter vector would silently truncate the last
-    * subspace's dot product (VecDot folds min(len) elements) and
-    * append a WRONG code to the stored index with no error.
+    * in the plan as literals, so encoding is a pure projection — no
+    * shuffle, no state store, Append-mode safe, which is exactly what
+    * an in-flight encode needs (a streaming groupBy re-derivation of
+    * [[encode]]'s code-row aggregate would carry unbounded per-vector
+    * state for no reason: all of a vector's subvectors live in its own
+    * row). Bit-identical to [[encode]]: each subspace runs the same
+    * [[Ivf.nearest]] fold, over the literal list instead of the
+    * broadcast row, and the dot products fold left-to-right over the
+    * same doubles. `cbsLocal(s)` lists (cid,
+    * cent) for subspace s; `qvec` must be the quantized integral-grid
+    * vector of EXACTLY m·dsub dims — enforced per row, mirroring
+    * [[subvectorsOf]]'s guard: a shorter vector would silently
+    * truncate the last subspace's dot product (VecDot folds min(len)
+    * elements) and append a WRONG code to the stored index with no
+    * error.
     *
-    * Two argmin forms, chosen per subspace by k (the row semantics
-    * are identical — see [[argminCid]]):
-    *  - k ≤ `chainMaxK`: a `least(struct(d2, cid))` literal chain —
-    *    one expression node per centroid, fully whole-stage-codegen'd;
-    *  - k > `chainMaxK`: the codebook embeds as ONE `typedLit` array
-    *    of (cid, cent) structs and the argmin is a higher-order
-    *    `aggregate` fold — expression-tree size is O(1) in k, so a
-    *    production codebook (k=256, m=16 = 4096 centroids) compiles
-    *    where the chain form would blow janino's 64 KB method limit.
-    *    Spark's higher-order functions are CodegenFallback, which
-    *    excludes the projection from whole-stage codegen — the fold
-    *    form is a deliberate, TESTED interpreted fallback: the plan
-    *    stays a map-only Project (no exchange, no aggregate exec;
-    *    spec-asserted), per-row work is the same k·m distance
-    *    evaluations either way, and only the per-row dispatch is
-    *    interpreted. PqSpec pins both forms bit-equal on one
-    *    codebook and the fold form's parity with the batch
-    *    [[encode]] at k = 64. */
+    * The codebook embeds as ONE `typedLit` array, so the expression
+    * tree is O(m) whatever k is: a production codebook (k=256, m=16 =
+    * 4096 centroids) compiles. Spark's higher-order functions are
+    * CodegenFallback, so the projection runs interpreted; the plan
+    * stays a map-only Project (no exchange, no aggregate exec;
+    * spec-asserted). */
   def encodeCodesExpr(qvec: Column,
-      cbsLocal: IndexedSeq[Seq[(Long, Seq[Double])]],
-      chainMaxK: Int = 16): Column = {
+      cbsLocal: IndexedSeq[Seq[(Long, Seq[Double])]]): Column = {
     require(cbsLocal.nonEmpty && cbsLocal.forall(_.nonEmpty),
       "encodeCodesExpr needs at least one centroid per subspace")
     val dsub = cbsLocal.head.head._2.size
@@ -266,42 +241,15 @@ object Pq {
       .otherwise(raise_error(concat(
         lit("PQ: vector length "), size(qvec),
         lit(s" != ${m * dsub} = m*dsub of the literal codebook"))))
-    // Both forms compute the lexicographic minimum of (d2, cid) over
-    // the same per-subspace centroid list: the chain reduces
-    // least(struct) pairwise left-to-right; the fold keeps a
-    // running-min struct seeded at (Double.MaxValue, Long.MaxValue) —
-    // strictly greater than any real candidate (grid d2 values are
-    // finite, seed cids are < 2³²) — replaced on a strict struct `<`.
-    // Distinct cids make every pairwise comparison decisive, so the
-    // two forms are bit-identical on every input (spec-pinned), and
-    // both match [[assign]]'s aggregate min(struct(d2, cid)).
-    if (cbsLocal.forall(_.size <= chainMaxK))
-      array(cbsLocal.indices.map { s =>
-        val svec = slice(guarded, s * dsub + 1, dsub)
-        cbsLocal(s).map { case (cid, cent) =>
-          struct(dist2(svec, typedLit(cent)).as("d2"),
-            lit(cid).as("cid"))
-        }.reduce((a, b) => least(a, b)).getField("cid")
-      }: _*)
-    else {
-      // The subvector binds as a LAMBDA VARIABLE (zip_with), not a
-      // subexpression inside the fold: higher-order functions
-      // re-evaluate non-lambda subexpressions per element, so an
-      // in-lambda slice would copy the subvector k times per subspace
-      // — bound once here, the per-element work is exactly the
-      // distance evaluation, same as the batch [[assign]] path.
-      val svecs = transform(sequence(lit(0), lit(m - 1)),
-        s => slice(guarded, s * dsub + 1, lit(dsub)))
-      zip_with(svecs, typedLit(cbsLocal.map(_.toSeq).toSeq), (sv, cb) =>
-        aggregate(cb,
-          struct(lit(Double.MaxValue).as("d2"),
-            lit(Long.MaxValue).as("cid")),
-          (acc, c) => {
-            val cand = struct(dist2(sv, c.getField("_2")).as("d2"),
-              c.getField("_1").as("cid"))
-            when(cand < acc, cand).otherwise(acc)
-          }).getField("cid"))
-    }
+    // The subvector binds as a LAMBDA VARIABLE (zip_with), not a
+    // subexpression inside the fold: higher-order functions re-evaluate
+    // non-lambda subexpressions per element, so an in-lambda slice would
+    // copy the subvector k times per subspace.
+    val svecs = transform(sequence(lit(0), lit(m - 1)),
+      s => slice(guarded, s * dsub + 1, lit(dsub)))
+    zip_with(svecs, typedLit(cbsLocal.map(Ivf.centroidList).toSeq)
+        .cast(s"array<array<${Ivf.centroidType}>>"),
+      (sv, cb) => Ivf.nearest(sv, cb, LongType).getField("cid"))
   }
 
   /** Collect a stored codebook into [[encodeCodesExpr]]'s driver-side
@@ -346,9 +294,9 @@ object Pq {
     * OPQ motivation); watching err_sum drift against a stored
     * baseline tells the maintainer when [[appendCodes]]-era data has
     * outgrown the codebooks and a retrain is due. One train chain +
-    * one broadcast-codebook assign; the exchange carries (vec, sub)
-    * argmin structs, then m rows. Output: (sub, n_vectors, err_sum,
-    * avg_err). */
+    * one in-row broadcast-codebook assign; the only exchange over the
+    * subvectors carries per-(task, sub) partial sums, then m rows.
+    * Output: (sub, n_vectors, err_sum, avg_err). */
   def quantizationError(embeddings: DataFrame, idCol: String,
       vecCol: String, m: Int, numCentroids: Int,
       iterations: Int): DataFrame = {
@@ -538,29 +486,23 @@ object Pq {
       array(order.map(d => col(vecCol).getItem(d - 1)): _*).as(vecCol))
   }
 
-  /** Floor-quantized residual subvectors of `embeddings` against a
-    * FIXED coarse codebook — the shared front of the stored residual
-    * index's build and encode halves. `assigned` is the (vec_id, cid)
-    * coarse assignment, passed in so a caller that also needs it
-    * ([[residualEncode]]'s cid reattach) computes it ONCE. */
-  private def residualSubvectors(embeddings: DataFrame, idCol: String,
-      vecCol: String, coarse: DataFrame, m: Int,
-      assigned: DataFrame): DataFrame = {
-    val baseQ = Ivf.quantized(embeddings, idCol, vecCol)
-    subvectorsOf(
-      baseQ.join(assigned, Seq("vec_id"))
-        .join(broadcast(coarse), Seq("cid"))
-        .select(col("vec_id"),
-          zip_with(col("qvec").cast("array<double>"), col("cent"),
-            (x, c) => floor(x - c)).as("qvec")),
-      m)
-  }
-
-  /** The (vec_id, cid) coarse assignment for [[residualSubvectors]]. */
-  private def coarseAssign(embeddings: DataFrame, idCol: String,
-      vecCol: String, coarse: DataFrame): DataFrame =
-    Ivf.assignIds(Ivf.quantized(embeddings, idCol, vecCol), coarse)
-      .select(col("vec_id"), col("cid"))
+  /** Each vector's coarse cell and floor-quantized residual against a
+    * FIXED coarse codebook, from ONE in-row [[Ivf.withNearest]] fold —
+    * the winner's centroid rides the fold, so `floor(qvec − cent)`
+    * computes in the same row with no assignment join-back. The shared
+    * front of the residual index's build, encode and inline search.
+    * Input is keyed by `idCol`. Output: (vec_id, ccell, qvec, attrs*),
+    * ccell the coarse cell (named apart from the PQ code's `cid` it
+    * rides next to) and qvec the residual. */
+  private def residuals(embeddings: DataFrame, idCol: String,
+      vecCol: String, coarse: DataFrame,
+      attrCols: Seq[String] = Nil): DataFrame =
+    Ivf.withNearest(embeddings.select(col(idCol).as("vec_id") +:
+        Ivf.quantize(col(vecCol)).as("qvec") +: attrCols.map(col): _*),
+      coarse, "qvec")
+      .select(col("vec_id") +: col("__cid").as("ccell") +:
+        zip_with(col("qvec").cast("array<double>"), col("__cent"),
+          (x, c) => floor(x - c)).as("qvec") +: attrCols.map(col): _*)
 
   /** BUILD half of the stored residual index: residual codebooks for
     * a FIXED coarse codebook ([[residualIvfPqTopK]]'s training chain
@@ -572,35 +514,24 @@ object Pq {
       vecCol: String, coarse: DataFrame, m: Int, numCentroids: Int,
       pqIterations: Int): DataFrame =
     trainCodebooks(
-      residualSubvectors(embeddings, idCol, vecCol, coarse, m,
-          coarseAssign(embeddings, idCol, vecCol, coarse))
+      subvectorsOf(residuals(embeddings, idCol, vecCol, coarse), m)
         .transform(graft.util.CacheScope.persist),
       seedIds(embeddings, idCol, numCentroids), pqIterations)
 
   /** ENCODE half of the stored residual index: coarse cell + residual
     * PQ codes per vector against FIXED codebooks — the stored row of
-    * the IVFADC layout (one cell id + m small ints). Broadcast
-    * passes only; the id-keyed cid reattach join is AQE-gated. */
+    * the IVFADC layout (one cell id + m small ints). The coarse cell
+    * and attrs (the [[encodeIndexed]] filterable-attribute discipline
+    * on the IVFADC row) ride the code-row aggregate as constant
+    * payload, never a join back to the corpus. Input is keyed by
+    * `idCol`. Output: (vec_id, cid, codes, attrs*). */
   def residualEncode(embeddings: DataFrame, idCol: String,
       vecCol: String, coarse: DataFrame, cbs: DataFrame, m: Int,
-      attrCols: Seq[String] = Nil): DataFrame = {
-    // computed once, persisted: feeds BOTH the residual build and the
-    // cid reattach — a second assignIds pass over the corpus would
-    // double the broadcast-codebook argmin work. Attrs (the
-    // [[encodeIndexed]] filterable-attribute discipline on the IVFADC
-    // row) ride the assignment argmin via Ivf.flatIndex — never a
-    // join back to the corpus.
-    val assigned = (attrCols match {
-      case Nil => coarseAssign(embeddings, idCol, vecCol, coarse)
-      case as => Ivf.flatIndex(coarse, embeddings, idCol, vecCol, as)
-        .select(col("vec_id") +: col("cid") +: as.map(col): _*)
-    }).transform(graft.util.CacheScope.persist)
-    codesFrom(residualSubvectors(embeddings, idCol, vecCol, coarse, m,
-        assigned.select(col("vec_id"), col("cid"))), cbs)
-      .join(assigned, Seq("vec_id"))
-      .select(col("vec_id") +: col("cid") +: col("codes") +:
+      attrCols: Seq[String] = Nil): DataFrame =
+    codesFrom(subvectorsOf(residuals(embeddings, idCol, vecCol, coarse,
+        attrCols), m, "ccell" +: attrCols), cbs, "ccell" +: attrCols)
+      .select(col("vec_id") +: col("ccell").as("cid") +: col("codes") +:
         attrCols.map(col): _*)
-  }
 
   /** O(new) DAILY maintenance for the stored RESIDUAL index —
     * [[appendCodes]] with the coarse assignment carried: coarse AND
@@ -613,6 +544,23 @@ object Pq {
       m: Int): DataFrame =
     storedCodes.unionByName(
       residualEncode(batch, idCol, vecCol, coarse, cbs, m))
+
+  /** ADC distance of a row carrying `codes` and its query's `dmap`
+    * (key sub·2³² + cid → d2): the m lookups summed in fixed subspace
+    * order s = 0..m−1, left to right. A code with no `dmap` entry means
+    * the codes were encoded against a different codebook than the one
+    * searched; it raises instead of scoring NULL, which would rank
+    * first. */
+  private def adcDistance(m: Int): Column =
+    (0 until m).map { s =>
+      val code = element_at(col("codes"), s + 1)
+      coalesce(element_at(col("dmap"), lit(s.toLong * (1L << 32)) + code),
+        raise_error(concat(lit("PQ: code "),
+          coalesce(code.cast("string"), lit("NULL")),
+          lit(s" of subspace $s has no entry in the searched codebook: " +
+            "codes and codebook mismatch (encoded against another " +
+            "codebook?)"))))
+    }.reduce(_ + _)
 
   /** Residual IVFADC search over the STORED index — the deployment
     * entry point for the residual family, completing the
@@ -646,7 +594,7 @@ object Pq {
       .partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
     val probes = Ivf.quantized(queries, idCol, vecCol)
       .crossJoin(broadcast(coarse))
-      .withColumn("d2", dist2(col("qvec"), col("cent")))
+      .withColumn("d2", Ivf.dist2(col("qvec"), col("cent")))
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cid"), col("cent"),
@@ -659,10 +607,9 @@ object Pq {
     // sub·2^32 + pqcid, the adcSearch packing: pqcids are seed vec
     // ids, raise_error-bounded to [0, 2^32) at the codebook choke
     // point, so the low half cannot collide across subspaces. Every
-    // candidate's (q_id, ccell) is a probe pair by construction and
-    // every code is a cbs cid, so the join and the map lookups are
-    // total — row set identical to the per-subspace join form, and
-    // the ADC sum folds s = 0..m−1 left-to-right exactly as before.
+    // candidate's (q_id, ccell) is a probe pair by construction, so
+    // the join is total; a code that is not a cbs cid raises in
+    // adcDistance, which folds s = 0..m−1 left-to-right.
     val qtab = probes
       .select(col("q_id"), col("cid").as("ccell"),
         zip_with(col("qvec").cast("array<double>"), col("cent"),
@@ -675,7 +622,7 @@ object Pq {
       .join(broadcast(cbs), Seq("sub"))
       .select(col("q_id"), col("ccell"),
         (col("sub").cast("long") * lit(1L << 32) + col("cid")).as("key"),
-        dist2(col("svec"), col("cent")).as("d2"))
+        Ivf.dist2(col("svec"), col("cent")).as("d2"))
       .groupBy(col("q_id"), col("ccell"))
       .agg(map_from_arrays(collect_list(col("key")),
         collect_list(col("d2"))).as("dmap"))
@@ -685,14 +632,11 @@ object Pq {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("cid").as("ccell"), col("vec_id"),
         col("codes"))
-    val lookup = (s: Int) => element_at(col("dmap"),
-      lit(s.toLong * (1L << 32)) + element_at(col("codes"), s + 1))
-    val adc = (0 until m).map(lookup).reduce(_ + _) // fixed s order
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
       .orderBy(col("adc_d2").asc, col("vec_id").asc)
     cand.join(broadcast(qtab), Seq("q_id", "ccell"))
-      .withColumn("adc_d2", adc)
+      .withColumn("adc_d2", adcDistance(m))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"),
@@ -716,34 +660,27 @@ object Pq {
     * buys bit-identical oracles. Row-internal dot products fold left
     * to right on both engines and need no such guard.
     *
-    * Scale shape: identical to [[ivfPqTopK]] plus one broadcast-coarse
-    * residual pass over the base; the per-cell lookup tables join the
-    * candidate frame per subspace as broadcast hash joins on computed
-    * keys. Output: (q_id, n_id, adc_d2, rnk). */
+    * Scale shape: identical to [[ivfPqTopK]] plus one in-row
+    * broadcast-coarse residual pass over the base, which both trains
+    * the codebooks and builds the stored rows; the search tail is
+    * [[residualSearch]]'s. Output: (q_id, n_id, adc_d2, rnk). */
   def residualIvfPqTopK(embeddings: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, numCoarse: Int,
       coarseIterations: Int, m: Int, numCentroids: Int,
       pqIterations: Int, nprobe: Int, topK: Int): DataFrame = {
     val coarse = Ivf.centroids(embeddings, idCol, vecCol, numCoarse,
       coarseIterations)
-    val baseQ = Ivf.quantized(embeddings, idCol, vecCol)
-      .transform(graft.util.CacheScope.persist)
-    val assigned = Ivf.assignIds(baseQ, coarse)
-      .select(col("vec_id"), col("cid"))
-      .transform(graft.util.CacheScope.persist)
-    val resid = baseQ.join(assigned, Seq("vec_id"))
-      .join(broadcast(coarse), Seq("cid"))
-      .select(col("vec_id"),
-        zip_with(col("qvec").cast("array<double>"), col("cent"),
-          (x, c) => floor(x - c)).as("qvec"))
-    val sv = subvectorsOf(resid, m)
+    // ONE residual pass, persisted: its subvectors train the codebooks
+    // and, with the coarse cell riding along, build the stored rows
+    val sv = subvectorsOf(residuals(embeddings, idCol, vecCol, coarse), m,
+        Seq("ccell"))
       .transform(graft.util.CacheScope.persist)
     val cbs = trainCodebooks(sv, seedIds(embeddings, idCol, numCentroids),
       pqIterations)
     // the stored (vec_id, cid, codes) row residualEncode would write —
     // the search tail is exactly the deployment path over it
-    val stored = codesFrom(sv, cbs).join(assigned, Seq("vec_id"))
-      .select(col("vec_id"), col("cid"), col("codes"))
+    val stored = codesFrom(sv, cbs, Seq("ccell"))
+      .select(col("vec_id"), col("ccell").as("cid"), col("codes"))
     residualSearch(coarse, cbs, stored, queries, idCol, vecCol, m,
       nprobe, topK)
   }
@@ -792,7 +729,7 @@ object Pq {
     * [[ivfPqTopK]] is exactly build + this.
     *
     * FILTERED serving: build `assigned` with [[Ivf.flatIndex]] (attrs
-    * ride the argmin exchange) and pass `assigned.filter(pred)` — the
+    * stay on the assignment row) and pass `assigned.filter(pred)` — the
     * predicate restricts the assignment SCAN before the probe join
     * (parquet pushdown at rest), so candidates shrink at the source
     * and k never under-fills (the [[Ivf.filteredSearch]] discipline).
@@ -809,7 +746,7 @@ object Pq {
       .partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
     val probes = Ivf.quantized(queries, idCol, vecCol)
       .crossJoin(broadcast(coarse))
-      .withColumn("d2", dist2(col("qvec"), col("cent")))
+      .withColumn("d2", Ivf.dist2(col("qvec"), col("cent")))
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cid"))
@@ -817,22 +754,19 @@ object Pq {
       .join(broadcast(cbs), Seq("sub"))
       .select(col("vec_id").as("q_id"),
         (col("sub").cast("long") * lit(1L << 32) + col("cid")).as("key"),
-        dist2(col("svec"), col("cent")).as("d2"))
+        Ivf.dist2(col("svec"), col("cent")).as("d2"))
       .groupBy(col("q_id"))
       .agg(map_from_arrays(collect_list(col("key")),
         collect_list(col("d2"))).as("dmap"))
     val cand = probes.join(assigned, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id")).distinct()
-    val lookup = (s: Int) => element_at(col("dmap"),
-      lit(s.toLong * (1L << 32)) + element_at(col("codes"), s + 1))
-    val adc = (0 until m).map(lookup).reduce(_ + _) // fixed s order
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
       .orderBy(col("adc_d2").asc, col("vec_id").asc)
     cand.join(codes, Seq("vec_id"))
       .join(broadcast(qtab), Seq("q_id"))
-      .withColumn("adc_d2", adc)
+      .withColumn("adc_d2", adcDistance(m))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"),
@@ -910,7 +844,7 @@ object Pq {
       .orderBy(col("exact_d2").asc, col("n_id").asc)
     baseQ.join(broadcast(short), col("vec_id") === col("n_id"))
       .join(broadcast(qpanel), Seq("q_id"))
-      .withColumn("exact_d2", dist2(col("__qv"), col("qvec")))
+      .withColumn("exact_d2", Ivf.dist2(col("__qv"), col("qvec")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("q_id"), col("vec_id").as("n_id"), col("exact_d2"),
@@ -955,19 +889,16 @@ object Pq {
         // and seedIds raise_errors any id outside [0, 2^32), so the
         // low half cannot collide across subspaces
         (col("sub").cast("long") * lit(1L << 32) + col("cid")).as("key"),
-        dist2(col("svec"), col("cent")).as("d2"))
+        Ivf.dist2(col("svec"), col("cent")).as("d2"))
       .groupBy(col("q_id"))
       .agg(map_from_arrays(collect_list(col("key")),
         collect_list(col("d2"))).as("dmap"))
-    val lookup = (s: Int) => element_at(col("dmap"),
-      lit(s.toLong * (1L << 32)) + element_at(col("codes"), s + 1))
-    val adc = (0 until m).map(lookup).reduce(_ + _) // fixed s order
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
       .orderBy(col("adc_d2").asc, col("vec_id").asc)
     codes.crossJoin(broadcast(qtab))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adc_d2", adc)
+      .withColumn("adc_d2", adcDistance(m))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
       .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"),

@@ -2874,8 +2874,8 @@ ${coarseCtes()},
   // FILTERED vector search — the attribute-predicate seam every
   // production vector store exposes ("nearest WHERE label = 3"): the
   // stored IVF-Flat index carries the filterable attribute IN the
-  // index row (Ivf.flatIndex — one argmin exchange builds assignment
-  // + payload together), and at query time the predicate is a plain
+  // index row (Ivf.flatIndex — the in-row nearest fold builds
+  // assignment + payload together), and at query time the predicate is a plain
   // column filter on the index scan BEFORE the probe join — the
   // candidate stream shrinks at the source instead of scoring
   // everything and discarding, and k never under-fills the way a
@@ -3762,7 +3762,7 @@ ${coarseCtes("vec_id % 3 > 0")},
   // FILTERED search on the COMPRESSED index — q235's attribute
   // predicate completing the filter × index-family matrix: the
   // calibrated int8 index stores its filterable attribute IN the
-  // assignment table (Ivf.flatIndex builds it in the argmin exchange;
+  // assignment table (Ivf.flatIndex builds it in the in-row fold;
   // the codes table carries the geometry, so the assignment stays a
   // 3-column frame), and the predicate filters that scan BEFORE the
   // probe join — pure composition of existing verbs, zero new plan
@@ -3978,7 +3978,7 @@ ${coarseCtes()},
   // FILTERED search on the PQ/ADC index — q248's predicate discipline
   // on the layout that actually serves at billion scale (m bytes per
   // vector): the attributed assignment comes from Ivf.flatIndex
-  // (attrs ride the argmin exchange) and the predicate filters that
+  // (attrs stay on the assignment row) and the predicate filters that
   // scan BEFORE the probe join in Pq.ivfPqSearch, so candidates
   // shrink at the source and k never under-fills. This closes the
   // filter × index-family matrix on the compressed axis — PqSpec pins

@@ -68,16 +68,18 @@ class PlanAuditSpec extends SparkSpec {
       // q208 = q185's stored-table search + q195's equi-join rerank
       // on the ≤ |Q|·shortlist frame — the same bounded fans
       "q208_stored_rerank_funnel",
-      // q197's coarse assignment fans the ≤ numCoarse codebook over
-      // the corpus (q36/q110's bounded class); the residual-PQ encode
-      // is sub-keyed equi-joins, the append a union, the cid reattach
-      // an id-keyed equi-join (q194 needs no exception: its PQ assign
-      // path is equi-joins only)
+      // q197's coarse assignment fans the one-row gathered codebook
+      // over the corpus (q36/q110's bounded class) and folds in-row,
+      // the residual computing in the same row; the residual-PQ encode
+      // is sub-keyed equi-joins onto one gathered row per subspace, the
+      // append a union (q194 needs no exception: its PQ assign path is
+      // equi-joins only)
       "q197_residual_pq_index_append",
       // q198/q202's assignment fans the ≤8-row codebook — q36/q110's
-      // class; the argmin folds in-row against the one broadcast
-      // codebook row, the health aggregate exchanges per-(task, cell)
-      // partials, and q202's ledger merge is ledger-sized
+      // class; the nearest-centroid fold runs in-row against the one
+      // broadcast codebook row, the health aggregate exchanges
+      // per-(task, cell) partials, and q202's ledger merge is
+      // ledger-sized
       "q198_ann_index_health", "q202_incremental_index_health",
       // q211 runs q198's cellHealth fan twice (stored build + the
       // O(deleted) retraction score) — same ≤8-row codebook class;

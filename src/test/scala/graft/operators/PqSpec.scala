@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.VectorFunctions
 
 /** Product quantization (Pq): codebook shape, encoding determinism,
   * ADC semantics, and an exactness fixture where the corpus is
@@ -281,10 +283,13 @@ class PqSpec extends SparkSpec {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == Map(3L -> (1L, 1000000000000L), 7L -> (0L, 0L)),
         s"tie not broken to the lower cid: $got")
-      // the min(struct(d2, cid)) aggregate the in-row fold replaced
-      val argmin = Ivf.assignIds(Ivf.quantized(vecs, "vec_id", "embedding"),
-        cb).collect().map(_.getLong(1)).toSeq
-      assert(argmin == Seq(3L))
+      // assignIds runs the same fold, without a vec_id exchange
+      val ids = Ivf.assignIds(Ivf.quantized(vecs, "vec_id", "embedding"),
+        cb)
+      assert(ids.collect().map(_.getLong(1)).toSeq == Seq(3L))
+      val idsPlan = ids.queryExecution.executedPlan.toString
+      assert(!idsPlan.contains("hashpartitioning(vec_id"),
+        s"assignIds exchanged on vec_id:\n$idsPlan")
       val plan = health.queryExecution.executedPlan.toString
       assert(!plan.contains("hashpartitioning(vec_id"),
         s"cellHealth exchanged on vec_id:\n$plan")
@@ -310,9 +315,109 @@ class PqSpec extends SparkSpec {
       s"wrong failure: ${en.getMessage}")
   }
 
+  test("assignment output schemas are pinned: names and types") {
+    // every IVF/PQ assignment folds in-row through Ivf.nearest; the
+    // outputs keep the codebook's own cid type (BIGINT here, from the
+    // vec_id seeds), never a widened or renamed column
+    val m = 4
+    val coarse = Ivf.centroids(emb, "vec_id", "embedding", 4, 1)
+    val q = Ivf.quantized(emb, "vec_id", "embedding")
+    val cbs = Pq.codebooks(emb, "vec_id", "embedding", m, k = 4,
+      iterations = 1)
+    val got = Seq(
+      "assign" -> Ivf.assign(q, coarse),
+      "assignIds" -> Ivf.assignIds(q, coarse),
+      "flatIndex" -> Ivf.flatIndex(coarse, emb, "vec_id", "embedding",
+        Seq("label")),
+      "occupancy" -> Ivf.occupancy(coarse, emb, "vec_id", "embedding", "n"),
+      "centroids" -> coarse,
+      "codebooks" -> cbs,
+      "encode" -> Pq.encode(emb, "vec_id", "embedding", m, cbs),
+      "encodeIndexed" -> Pq.encodeIndexed(emb, "vec_id", "embedding", m,
+        cbs, Seq("label")),
+      "residualEncode" -> Pq.residualEncode(emb, "vec_id", "embedding",
+        coarse, cbs, m, Seq("label")),
+      "quantizationError" -> Pq.quantizationError(emb, "vec_id",
+        "embedding", m, numCentroids = 4, iterations = 1)
+    ).map { case (n, df) => n -> df.schema.simpleString }
+    val want = Seq(
+      "assign" -> "struct<vec_id:bigint,qvec:array<bigint>,cid:bigint,d2:double>",
+      "assignIds" -> "struct<vec_id:bigint,cid:bigint,d2:double>",
+      "flatIndex" -> "struct<vec_id:bigint,cid:bigint,qvec:array<bigint>,label:int>",
+      "occupancy" -> "struct<cid:bigint,n:bigint>",
+      "centroids" -> "struct<cid:bigint,cent:array<double>>",
+      "codebooks" -> "struct<sub:int,cid:bigint,cent:array<double>>",
+      "encode" -> "struct<vec_id:bigint,codes:array<bigint>>",
+      "encodeIndexed" -> "struct<vec_id:bigint,codes:array<bigint>,label:int>",
+      "residualEncode" -> "struct<vec_id:bigint,cid:bigint,codes:array<bigint>,label:int>",
+      "quantizationError" -> "struct<sub:int,n_vectors:bigint,err_sum:bigint,avg_err:bigint>")
+    assert(got == want)
+  }
+
+  test("assignIds and encode: a wrong-length or null vector raises") {
+    val s = spark
+    import s.implicits._
+    val coarse = Seq((0L, Array(0.0, 0.0, 0.0, 0.0)),
+      (1L, Array(1e6, 0.0, 0.0, 0.0))).toDF("cid", "cent")
+    // m = 2 subspaces of 2 dims: a 6-dim vector splits evenly, so it is
+    // the nearest fold, not the divisibility guard, that must refuse
+    // its 3-dim subvectors
+    val cbs = Seq((0, 0L, Array(0.0, 0.0)), (0, 1L, Array(1e6, 0.0)),
+      (1, 0L, Array(0.0, 0.0)), (1, 1L, Array(0.0, 1e6)))
+      .toDF("sub", "cid", "cent")
+    val wrong = Seq((0L, Array.fill(6)(1f))).toDF("vec_id", "embedding")
+    val nul = Seq((0L, null: Array[Float])).toDF("vec_id", "embedding")
+    def failure(body: => Unit): String =
+      intercept[Exception](body).getMessage
+    val cases = Seq(
+      failure(Ivf.assignIds(Ivf.quantized(wrong, "vec_id", "embedding"),
+        coarse).collect()) -> "vector length 6 != centroid dim 4",
+      failure(Ivf.assignIds(Ivf.quantized(nul, "vec_id", "embedding"),
+        coarse).collect()) -> "vector length NULL",
+      failure(Pq.encode(wrong, "vec_id", "embedding", 2, cbs).collect())
+        -> "vector length 3 != centroid dim 2",
+      failure(Pq.encode(nul, "vec_id", "embedding", 2, cbs).collect())
+        -> "vector length NULL",
+      // a codebook row with a null cid has no cell to name
+      failure(Ivf.assignIds(Ivf.quantized(wrong, "vec_id", "embedding"),
+        Seq((null: java.lang.Long, Array.fill(6)(0.0)))
+          .toDF("cid", "cent")).collect()) -> "IVF: centroid id")
+    for ((msg, want) <- cases)
+      assert(msg != null && msg.contains(want), s"wrong failure: $msg")
+  }
+
+  test("search with a stale codebook raises on the codebook/codes mismatch") {
+    // codes cite the seed cids of the codebook they were encoded with;
+    // a codebook retrained from other seeds has no ADC entry for them.
+    // A missing entry must raise, not score NULL (which ranks first).
+    val m = 4
+    val cbs = Pq.codebooks(emb, "vec_id", "embedding", m, k = 4,
+      iterations = 1)
+    val stale = Pq.codebooks(emb.filter(col("vec_id") >= 100), "vec_id",
+      "embedding", m, k = 4, iterations = 1)
+    val coarse = Ivf.centroids(emb, "vec_id", "embedding", 2, 1)
+    val q = emb.filter(col("vec_id") < 3)
+    val codes = Pq.encode(emb, "vec_id", "embedding", m, cbs)
+    val assigned = Ivf.assignIds(Ivf.quantized(emb, "vec_id", "embedding"),
+      coarse)
+    val stored = Pq.residualEncode(emb, "vec_id", "embedding", coarse,
+      cbs, m)
+    val searches = Seq(
+      () => Pq.adcSearch(stale, codes, q, "vec_id", "embedding", m, 5),
+      () => Pq.ivfPqSearch(coarse, stale, assigned, codes, q, "vec_id",
+        "embedding", m, nprobe = 2, topK = 5),
+      () => Pq.residualSearch(coarse, stale, stored, q, "vec_id",
+        "embedding", m, nprobe = 2, topK = 5))
+    for (search <- searches) {
+      val e = intercept[Exception](search().collect())
+      assert(e.getMessage.contains("codes and codebook mismatch"),
+        s"wrong failure: ${e.getMessage}")
+    }
+  }
+
   test("encodeCodesExpr ≡ encode: literal-codebook in-row codes match") {
-    // the stateless streaming encoder must reproduce the aggregate
-    // argmin bit-for-bit — same least-struct tie-break, same
+    // the stateless streaming encoder must reproduce the batch encode
+    // bit-for-bit — the same Ivf.nearest fold and tie-break, the same
     // left-to-right dot folds over driver-round-tripped doubles
     val m = 4
     val cbs = Pq.codebooks(emb, "vec_id", "embedding", m, k = 8,
@@ -343,23 +448,30 @@ class PqSpec extends SparkSpec {
   }
 
   test("encodeCodesExpr: fold form ≡ chain form bit-for-bit") {
-    // chainMaxK = 0 forces the typedLit-array + aggregate() fold on
-    // the same k=8 codebook the chain form serves by default — the
-    // two argmins must agree on every row (same lexicographic
-    // (d2, cid) minimum), or a production-size codebook would encode
-    // differently from the gated one
+    // the reference is the least(struct(d2, cid)) literal chain — the
+    // lexicographic (d2, cid) minimum written out, one expression node
+    // per centroid — on the same k=8 codebook: the Ivf.nearest fold
+    // must pick the same code on every row
     val m = 4
     val cbs = Pq.codebooks(emb, "vec_id", "embedding", m, k = 8,
       iterations = 2)
     val local = Pq.localCodebook(cbs, m)
+    val dsub = local.head.head._2.size
     val q = Ivf.quantized(emb, "vec_id", "embedding")
-    def codes(chainMaxK: Int) = q
-      .select(col("vec_id"),
-        Pq.encodeCodesExpr(col("qvec"), local, chainMaxK).as("codes"))
+    def dist2(a: Column, b: Column): Column =
+      VectorFunctions.dot(a, a) - lit(2.0) * VectorFunctions.dot(a, b) +
+        VectorFunctions.dot(b, b)
+    val chain = array(local.indices.map { s =>
+      val svec = slice(col("qvec"), s * dsub + 1, dsub)
+      local(s).map { case (cid, cent) =>
+        struct(dist2(svec, typedLit(cent)).as("d2"), lit(cid).as("cid"))
+      }.reduce((a, b) => least(a, b)).getField("cid")
+    }: _*)
+    def codes(c: Column) = q.select(col("vec_id"), c.as("codes"))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toList)).toSeq
-    assert(codes(0) == codes(16),
-      "aggregate-fold argmin diverged from the least-chain argmin")
+    assert(codes(Pq.encodeCodesExpr(col("qvec"), local)) == codes(chain),
+      "the nearest-fold argmin diverged from the least-chain argmin")
   }
 
   test("encodeCodesExpr at k = 64 (fold form) ≡ batch encode") {
