@@ -826,54 +826,96 @@ object Similarity {
     g
   }
 
-  /** GRAPH-ANN search — BEAM SEARCH over a STORED kNN graph (the
-    * serve verb matching [[knnGraph]]'s build): each query starts at
-    * the `entryK` smallest-id vertices (the deterministic seed rule),
-    * and each hop expands the current beam's out-neighbors through
-    * the stored edge table, rescores exactly, and keeps the `beam`
-    * best — the fixed-fanout walk that makes graph indexes answer in
-    * O(hops·beam·k) distance evaluations instead of probing cells.
-    * The beam is MONOTONE (previous members stay candidates), so best
-    * distances never regress across hops; determinism comes from the
-    * (d2, id) tie-broken ranks everywhere.
-    *
-    * Scale shape: the per-query state (beam·|Q| rows) is bounded and
-    * BROADCASTS — each hop is one map-side join over the edge-table
-    * scan (expansion) plus one over the base scan (rescore); nothing
-    * corpus-sized shuffles, and hops is a small constant. Output:
-    * (q_id, n_id, d2, rnk ≤ topK), self-matches excluded. */
-  /** The walk core shared by every graph-serve verb: the final beam,
-    * plus (when `keepHops`) every hop's SCORED-candidate frame
-    * s_0..s_hops and every hop-input beam b_0..b_(hops-1). The beam is
-    * monotone under the (d2, dst) total order — each hop keeps the
-    * best `beam` of a set CONTAINING the previous beam — so a
-    * candidate dropped at hop h sorts after beam h's worst, which
-    * sorts after the FINAL beam's worst: the final beam is exactly the
-    * top-`beam` of everything the walk ever scored. That equivalence
-    * is what lets the masked/filtered verbs rank over the seen-union
-    * while plain [[graphSearch]] ranks over the final beam — same
-    * result for topK ≤ beam, and the union back-fills k when a mask
-    * or predicate knocks beam members out. */
+  /** The walk's output: the final beam (q_id, __v, dst, d2), plus
+    * (when `keepHops`) every hop's SCORED-candidate frame s_0..s_hops
+    * and every hop-input beam b_0..b_(hops-1). */
   private final case class GraphWalk(best: DataFrame,
       scored: Seq[DataFrame], beams: Seq[DataFrame])
 
-  /** `nVariants > 1` walks a WHOLE SWEEP in one pass: the graph
-    * carries an int `__v` column (0..nVariants−1, e.g. one value per
-    * prune α), every query fans across the variant spine, the
-    * expansion joins edges on (__v, src), and the beam window
-    * partitions by (q_id, __v) — so N sweep points cost ONE chain of
-    * hops (one checkpoint, one expansion join, one score, one rank
-    * exchange per hop) instead of N chains, and the corpus-sized
-    * frames (the quantized base, the edge scan) are touched once.
-    * Per-(q_id, __v) isolation makes the variant walk ≡ N independent
-    * walks (spec-pinned through the sweep-vs-single-α equivalence).
-    * With the default nVariants = 1 the `__v` machinery vanishes. */
-  private def graphWalk(graph: DataFrame, base: DataFrame,
+  /** One variant's descent: `hopsPerLayer` hops on each layer from
+    * `topLayer` down to 0 under a `beam` cap, so hop h (from 1)
+    * expands layer topLayer − (h−1) / hopsPerLayer. A flat walk of
+    * `hops` hops is the descent (beam, 0, hops). */
+  private final case class Descent(beam: Int, topLayer: Int,
+      hopsPerLayer: Int) {
+    def hops: Int = (topLayer + 1) * hopsPerLayer
+    def layerAt(h: Int): Int = topLayer - (h - 1) / hopsPerLayer
+  }
+
+  /** The argument check every walk verb shares: entryK and every beam
+    * ≥ 1, layers and hops ≥ 0, and every descent spends the SAME
+    * number of hops (one hop chain walks them all). A `topK` (None for
+    * the cost-only verb) is ≥ 1 and, when `capped` — the rank runs
+    * over the final beam, not the seen-union — at most every beam. */
+  private def walkChecked(verb: String, entryK: Int, topK: Option[Int],
+      capped: Boolean, descents: Seq[Descent]): Seq[Descent] = {
+    require(descents.nonEmpty, s"$verb: need at least one sweep point")
+    require(entryK >= 1, s"$verb: entryK=$entryK must be >= 1")
+    topK.foreach(k => require(k >= 1, s"$verb: topK=$k must be >= 1"))
+    descents.foreach { d =>
+      require(d.beam >= 1 && d.topLayer >= 0 && d.hopsPerLayer >= 0,
+        s"$verb: beam=${d.beam} must be >= 1 (maxLayer=${d.topLayer}, " +
+          s"hops per layer=${d.hopsPerLayer} >= 0)")
+      if (capped) topK.foreach(k => require(k <= d.beam,
+        s"$verb: topK=$k > beam=${d.beam} — the serve rank runs over " +
+          "the beam-capped frame, so k past the beam can never fill"))
+    }
+    val budgets = descents.map(_.hops)
+    require(budgets.distinct.size == 1,
+      s"$verb: points must spend EQUAL total hops (the " +
+        s"comparable-frontier contract), got $budgets")
+    descents
+  }
+
+  /** The beam walk behind every graph-serve verb. `edges` is
+    * ([__v,] [layer,] src, dst): a [[layeredKnnGraph]] carries its
+    * layers, a flat graph has no `layer` (every edge is on layer 0, so
+    * every descent is (beam, 0, hops)), and a sweep's stacked
+    * per-variant tables carry an int `__v`. Variant i walks
+    * `descents(i)`. Every query fans across the variants, so the walk
+    * always carries `__v` (0 for a single descent), its beam window
+    * partitions by (q_id, __v), and each hop's expansion joins the ONE
+    * persisted edge frame on ([__v,] [layer,] src) — each key only
+    * when the edges have it, `layer` restricted by a column predicate
+    * (a flat walk pays none: a predicate on its edge scan makes Spark
+    * inject a runtime bloom-filter job into every hop). Variant i
+    * enters at the `entryK` smallest ids of its top layer (every id at
+    * layer 0; above it, the id ≡ 0 mod 2^top promotion rule) and keeps
+    * its own beam cap. N sweep points thus cost ONE chain of hops (one
+    * checkpoint, one expansion join, one score, one rank exchange per
+    * hop) instead of N, the corpus-sized frames (the quantized base,
+    * the edge scan) are touched once, and per-(q_id, __v) isolation
+    * makes the variant walk ≡ N independent walks (spec-pinned).
+    *
+    * The beam is monotone under the (d2, dst) total order — each hop
+    * keeps the best `beam` of a set CONTAINING the previous beam, on
+    * every layer — so a candidate dropped at hop h sorts after beam
+    * h's worst, which sorts after the FINAL beam's worst: the final
+    * beam is exactly the top-`beam` of everything the walk ever
+    * scored. That equivalence is what lets the masked/filtered verbs
+    * rank over the seen-union while the plain verbs rank over the
+    * final beam — same result for topK ≤ beam, and the union
+    * back-fills k when a mask or predicate knocks beam members out. */
+  private def beamWalk(verb: String, edges: DataFrame, base: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, entryK: Int,
-      beam: Int, hops: Int, keepHops: Boolean,
-      nVariants: Int = 1): GraphWalk = {
-    val vCols = if (nVariants > 1) Seq(col("__v")) else Nil
-    val vKey = if (nVariants > 1) Seq("__v") else Nil
+      descents: Seq[Descent], keepHops: Boolean): GraphWalk = {
+    def members(top: Int): DataFrame =
+      if (top == 0) base else base.filter(col(idCol) % lit(1L << top) === 0)
+    // fail-loud, not silently empty: a top layer with no members (a
+    // caller's maxLayer beyond the built graph's promotion range, or a
+    // corpus with no id ≡ 0 mod 2^maxLayer) would empty the entry set
+    // and therefore EVERY result. One bounded probe per distinct top
+    // layer (the generation-guard action class); layer 0 holds every
+    // id, so flat walks pay no probe.
+    val tops = descents.zipWithIndex.groupBy(_._1.topLayer).toSeq
+      .sortBy(_._1)
+    tops.map(_._1).filter(_ > 0).foreach { top =>
+      require(members(top).take(1).nonEmpty,
+        s"$verb: top layer $top has no members (no id ≡ 0 mod " +
+          s"${1L << top} in the corpus) — maxLayer exceeds the built " +
+          "graph's promotion range")
+    }
+    val eKey = Seq("__v", "layer").filter(edges.columns.contains) :+ "src"
     val baseQ = Ivf.quantized(base, idCol, vecCol)
       .withColumn("__n2", dot(col("qvec"), col("qvec")))
       .transform(graft.util.CacheScope.persist)
@@ -883,8 +925,14 @@ object Similarity {
     // pinned: every hop's expansion reads the edge table — against a
     // stored table this is a cheap rescan, but an in-plan graph (the
     // fixture shape) would otherwise REBUILD per hop
-    val edges = graph.select(vCols ++ Seq(col("src"), col("dst")): _*)
+    val lg = edges.select((eKey :+ "dst").map(col): _*)
       .transform(graft.util.CacheScope.persist)
+    // a per-variant constant: a literal when the variants agree
+    def perVariant(xs: Seq[Int]): Column =
+      if (xs.distinct.size == 1) lit(xs.head)
+      else xs.zipWithIndex.tail.foldLeft(when(col("__v") === 0, xs.head)) {
+        case (c, (x, i)) => c.when(col("__v") === i, x)
+      }
     def score(cand: DataFrame): DataFrame =
       baseQ.select(col("vec_id").as("dst"), col("qvec").as("__dv"),
           col("__n2").as("__dn"))
@@ -892,25 +940,26 @@ object Similarity {
         .join(broadcast(qp), Seq("q_id"))
         .withColumn("d2", gridDist2(col("__qn"), col("__qv"),
           col("__dn"), col("__dv")))
-        .select((col("q_id") +: vCols) ++ Seq(col("dst"), col("d2")): _*)
-    def keep(scored: DataFrame, n: Int): DataFrame = {
-      val w = Window.partitionBy(col("q_id") +: vCols: _*)
+        .select(col("q_id"), col("__v"), col("dst"), col("d2"))
+    val beamCap = perVariant(descents.map(_.beam))
+    def keep(scored: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("q_id"), col("__v"))
         .orderBy(col("d2").asc, col("dst").asc)
       scored.withColumn("__rnk", row_number().over(w))
-        .filter(col("__rnk") <= n).drop("__rnk")
+        .filter(col("__rnk") <= beamCap).drop("__rnk")
     }
-    val entries = base.select(col(idCol).as("dst"))
-      .orderBy(col("dst").asc).limit(entryK)
-    val qSpine =
-      if (nVariants > 1)
-        qp.select(col("q_id")).crossJoin(broadcast(
-          graph.sparkSession.range(nVariants)
-            .select(col("id").cast("int").as("__v"))))
-      else qp.select(col("q_id"))
+    // one entry set per distinct top layer, fanned to its variants
+    val entries = tops.map { case (top, vs) =>
+      members(top).select(col(idCol).as("dst"))
+        .orderBy(col("dst").asc).limit(entryK)
+        .withColumn("__v",
+          if (vs.size == 1) lit(vs.head._2)
+          else explode(array(vs.map(v => lit(v._2)): _*)))
+    }.reduce(_.unionByName(_))
     val s0 = score(
-      qSpine.crossJoin(broadcast(entries))
+      queries.select(col(idCol).as("q_id")).crossJoin(broadcast(entries))
         .filter(col("dst") =!= col("q_id")))
-    var best = keep(s0, beam)
+    var best = keep(s0)
     val scoredAcc = scala.collection.mutable.ListBuffer(s0)
     val beamAcc = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // each hop reads the previous beam TWICE (expansion + candidate
@@ -931,7 +980,7 @@ object Similarity {
     // recomputed once per consumer and the cadence win inverts —
     // q281/q282/q320 +20–35%); plain serves take the cadence.
     var lastCheckpoint: Option[DataFrame] = None
-    for (h <- 1 to hops) {
+    for (h <- 1 to descents.head.hops) {
       val doCp = keepHops || h % 2 == 1
       val cp = if (doCp) best.localCheckpoint() else best
       if (keepHops) {
@@ -942,51 +991,72 @@ object Similarity {
           org.apache.spark.sql.graft.Bridge.unpersistCheckpoint)
         lastCheckpoint = Some(cp)
       }
-      val exp = edges
-        .join(broadcast(cp.select((col("q_id") +: vCols)
-          :+ col("dst").as("src"): _*)), vKey :+ "src")
-        .select((col("q_id") +: vCols) :+ col("dst"): _*)
+      // each variant expands its own layer at hop h: the beam carries
+      // that layer as a join key, the edge scan keeps only those layers
+      val layers = descents.map(_.layerAt(h))
+      val hopEdges =
+        if (eKey.contains("layer"))
+          lg.filter(col("layer").isin(layers.distinct: _*))
+        else lg
+      val exp = hopEdges
+        .join(broadcast(cp.select(col("q_id"), col("__v"),
+          col("dst").as("src"), perVariant(layers).as("layer"))), eKey)
+        .select(col("q_id"), col("__v"), col("dst"))
         .filter(col("dst") =!= col("q_id"))
-      val cand = cp.select((col("q_id") +: vCols) :+ col("dst"): _*)
+      val cand = cp.select(col("q_id"), col("__v"), col("dst"))
         .unionByName(exp).distinct()
       val sh = score(cand)
       if (keepHops) scoredAcc += sh
-      best = keep(sh, beam)
+      best = keep(sh)
     }
     lastCheckpoint.foreach(graft.util.CacheScope.registerCheckpointed)
     GraphWalk(best, scoredAcc.toSeq, beamAcc.toSeq)
   }
 
-  /** (q_id[, __v], dst, d2) → the suite's (q_id[, __v], n_id, d2,
-    * rnk ≤ topK); `keys` is the rank partition — (q_id, __v) for a
-    * variant walk. */
-  private def rankWalk(scored: DataFrame, topK: Int,
-      keys: Seq[String] = Seq("q_id")): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
+  /** (q_id, __v, dst, d2) → the suite's (q_id, __v, n_id, d2,
+    * rnk ≤ topK), ranked per (q_id, __v) — the walk's own beam
+    * partition, so ranking the final beam adds no exchange. */
+  private def rankWalk(scored: DataFrame, topK: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"), col("__v"))
       .orderBy(col("d2").asc, col("dst").asc)
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= topK)
-      .select(keys.map(col) ++ Seq(col("dst").as("n_id"), col("d2"),
-        col("rnk").cast("int").as("rnk")): _*)
+      .select(col("q_id"), col("__v"), col("dst").as("n_id"), col("d2"),
+        col("rnk").cast("int").as("rnk"))
   }
 
   /** Everything the walk EVALUATED, deduped — d2 is deterministic per
-    * (q_id, dst), so the distinct collapses re-scores exactly. Size is
-    * O(|Q|·(entryK + hops·beam·k)): bounded, never corpus-shaped. */
+    * (q_id, __v, dst), so the distinct collapses re-scores exactly.
+    * Size is O(|Q|·(entryK + hops·beam·k)): bounded, never
+    * corpus-shaped. */
   private def seenUnion(walk: GraphWalk): DataFrame =
     walk.scored.reduce(_.unionByName(_)).distinct()
 
+  /** GRAPH-ANN search — BEAM SEARCH over a STORED kNN graph (the
+    * serve verb matching [[knnGraph]]'s build): each query starts at
+    * the `entryK` smallest-id vertices (the deterministic seed rule),
+    * and each hop expands the current beam's out-neighbors through
+    * the stored edge table, rescores exactly, and keeps the `beam`
+    * best — the fixed-fanout walk that makes graph indexes answer in
+    * O(hops·beam·k) distance evaluations instead of probing cells.
+    * The beam is MONOTONE (previous members stay candidates), so best
+    * distances never regress across hops; determinism comes from the
+    * (d2, id) tie-broken ranks everywhere.
+    *
+    * Scale shape: the per-query state (beam·|Q| rows) is bounded and
+    * BROADCASTS — each hop is one map-side join over the edge-table
+    * scan (expansion) plus one over the base scan (rescore); nothing
+    * corpus-sized shuffles, and hops is a small constant. Output:
+    * (q_id, n_id, d2, rnk ≤ topK), self-matches excluded. */
   def graphSearch(graph: DataFrame, base: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, entryK: Int,
       beam: Int, hops: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"graphSearch: entryK=$entryK, beam=$beam, hops=$hops, " +
-        s"topK=$topK must all be >= 1 (hops >= 0)")
-    require(topK <= beam,
-      s"graphSearch: topK=$topK > beam=$beam — the final rank runs " +
-        "over the beam-capped frame, so k past the beam can never fill")
-    rankWalk(graphWalk(graph, base, queries, idCol, vecCol, entryK,
-      beam, hops, keepHops = false).best, topK)
+    val verb = "graphSearch"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      Seq(Descent(beam, 0, hops)))
+    rankWalk(beamWalk(verb, graph.drop("layer"), base,
+      queries, idCol, vecCol, entryK, d, keepHops = false).best, topK)
+      .drop("__v")
   }
 
   /** TOMBSTONE-MASKED beam search — the q236 serving semantic on the
@@ -1001,7 +1071,7 @@ object Similarity {
     * beam) back-fills k from live candidates the beam evaluated but
     * dead members crowded out; with no tombstones it equals
     * [[graphSearch]] exactly (the beam-monotonicity argument on
-    * [[GraphWalk]]). Masked probing-all ≡ brute force over the live
+    * [[beamWalk]]). Masked probing-all ≡ brute force over the live
     * set (spec-pinned). Queries may themselves be tombstoned — queries
     * come from outside the index; only the NEIGHBOR side masks.
     * `tombstones`: (vec_id) rows. Output: (q_id, n_id, d2, rnk ≤ topK). */
@@ -1009,13 +1079,19 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String,
       tombstones: DataFrame, entryK: Int, beam: Int, hops: Int,
       topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"graphSearchMasked: entryK=$entryK, beam=$beam, hops=$hops, " +
-        s"topK=$topK must all be >= 1 (hops >= 0)")
-    val seen = seenUnion(graphWalk(graph, base, queries, idCol, vecCol,
-      entryK, beam, hops, keepHops = true))
+    val verb = "graphSearchMasked"
+    val d = walkChecked(verb, entryK, Some(topK), capped = false,
+      Seq(Descent(beam, 0, hops)))
+    maskedRank(beamWalk(verb, graph.drop("layer"), base,
+      queries, idCol, vecCol, entryK, d, keepHops = true), tombstones,
+      topK)
+  }
+
+  private def maskedRank(walk: GraphWalk, tombstones: DataFrame,
+      topK: Int): DataFrame = {
     val dead = tombstones.select(col("vec_id").as("dst")).distinct()
-    rankWalk(seen.join(broadcast(dead), Seq("dst"), "left_anti"), topK)
+    rankWalk(seenUnion(walk).join(broadcast(dead), Seq("dst"),
+      "left_anti"), topK).drop("__v")
   }
 
   /** ATTRIBUTE-FILTERED beam search — the q235 seam on the graph
@@ -1034,13 +1110,19 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String,
       predicate: Column, entryK: Int, beam: Int, hops: Int,
       topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"graphSearchFiltered: entryK=$entryK, beam=$beam, hops=$hops, " +
-        s"topK=$topK must all be >= 1 (hops >= 0)")
-    val seen = seenUnion(graphWalk(graph, base, queries, idCol, vecCol,
-      entryK, beam, hops, keepHops = true))
+    val verb = "graphSearchFiltered"
+    val d = walkChecked(verb, entryK, Some(topK), capped = false,
+      Seq(Descent(beam, 0, hops)))
+    filteredRank(beamWalk(verb, graph.drop("layer"), base,
+      queries, idCol, vecCol, entryK, d, keepHops = true), base, idCol,
+      predicate, topK)
+  }
+
+  private def filteredRank(walk: GraphWalk, base: DataFrame,
+      idCol: String, predicate: Column, topK: Int): DataFrame = {
     val keepIds = base.filter(predicate).select(col(idCol).as("dst"))
-    rankWalk(keepIds.join(broadcast(seen), Seq("dst")), topK)
+    rankWalk(keepIds.join(broadcast(seenUnion(walk)), Seq("dst")), topK)
+      .drop("__v")
   }
 
   /** Per-query serving-COST audit for the beam walk — [[graft
@@ -1059,22 +1141,24 @@ object Similarity {
   def graphProbeCost(graph: DataFrame, base: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, entryK: Int,
       beam: Int, hops: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hops >= 0,
-      s"graphProbeCost: entryK=$entryK, beam=$beam must be >= 1 " +
-        s"(hops=$hops >= 0)")
-    costFromWalk(graphWalk(graph, base, queries, idCol, vecCol, entryK,
-      beam, hops, keepHops = true), queries, idCol, hops)
+    val verb = "graphProbeCost"
+    val d = walkChecked(verb, entryK, None, capped = false,
+      Seq(Descent(beam, 0, hops)))
+    costFromWalk(beamWalk(verb, graph.drop("layer"), base,
+      queries, idCol, vecCol, entryK, d, keepHops = true), queries, idCol)
   }
 
+  /** A keepHops walk's (q_id, dist_evals, frontier); a walk of zero
+    * hops has no beams and no frontier. */
   private def costFromWalk(walk: GraphWalk, queries: DataFrame,
-      idCol: String, hops: Int): DataFrame = {
+      idCol: String): DataFrame = {
     def counts(dfs: Seq[DataFrame], as: String): DataFrame =
       dfs.map(_.groupBy(col("q_id")).agg(count(lit(1)).as("__n")))
         .reduce(_.unionByName(_))
         .groupBy(col("q_id")).agg(sum(col("__n")).as(as))
     val evals = counts(walk.scored, "dist_evals")
     val spine = queries.select(col(idCol).as("q_id"))
-    if (hops == 0)
+    if (walk.beams.isEmpty)
       spine.join(evals, Seq("q_id"), "left")
         .select(col("q_id"),
           coalesce(col("dist_evals"), lit(0L)).as("dist_evals"),
@@ -1092,6 +1176,13 @@ object Similarity {
     }
   }
 
+  /** [[recallAudit]] of the walk's final-beam serve result joined to
+    * its [[costFromWalk]] columns. */
+  private def recallCostFromWalk(walk: GraphWalk, queries: DataFrame,
+      idCol: String, exact: DataFrame, k: Int, topK: Int): DataFrame =
+    recallAudit(rankWalk(walk.best, topK), exact, k)
+      .join(costFromWalk(walk, queries, idCol), Seq("q_id"))
+
   /** [[recallAudit]] + [[graphProbeCost]] from ONE walk — the audit a
     * deployment actually runs reads the serve result AND the cost
     * columns off the SAME hop frames (the walk is the expensive part
@@ -1104,16 +1195,12 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String,
       exact: DataFrame, k: Int, entryK: Int, beam: Int, hops: Int,
       topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"graphRecallCost: entryK=$entryK, beam=$beam, hops=$hops, " +
-        s"topK=$topK must all be >= 1 (hops >= 0)")
-    require(topK <= beam,
-      s"graphRecallCost: topK=$topK > beam=$beam — the serve rank " +
-        "runs over the beam-capped frame")
-    val walk = graphWalk(graph, base, queries, idCol, vecCol, entryK,
-      beam, hops, keepHops = true)
-    recallAudit(rankWalk(walk.best, topK), exact, k)
-      .join(costFromWalk(walk, queries, idCol, hops), Seq("q_id"))
+    val verb = "graphRecallCost"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      Seq(Descent(beam, 0, hops)))
+    recallCostFromWalk(beamWalk(verb, graph.drop("layer"),
+      base, queries, idCol, vecCol, entryK, d, keepHops = true), queries,
+      idCol, exact, k, topK)
   }
 
   /** DIVERSIFIED edge pruning — the neighbor-selection heuristic that
@@ -2279,13 +2366,8 @@ object Similarity {
       idCol: String, vecCol: String, queries: DataFrame,
       exact: DataFrame, k: Int, alphas: Seq[(Long, Long)], entryK: Int,
       beam: Int, hops: Int, topK: Int): DataFrame = {
-    require(alphas.nonEmpty, "pruneRecallSweep: need at least one alpha")
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"pruneRecallSweep: entryK=$entryK, beam=$beam, topK=$topK " +
-        s"must be >= 1 (hops=$hops >= 0)")
-    require(topK <= beam,
-      s"pruneRecallSweep: topK=$topK > beam=$beam — the serve rank " +
-        "runs over the beam-capped frame")
+    walkChecked("pruneRecallSweep", entryK, Some(topK), capped = true,
+      alphas.map(_ => Descent(beam, 0, hops)))
     alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
     val g = pruneInputChecked(graph, k, alphas.head._1, alphas.head._2)
     pruneRecallSweepFrom(
@@ -2306,15 +2388,11 @@ object Similarity {
       idCol: String, vecCol: String, queries: DataFrame,
       exact: DataFrame, k: Int, alphas: Seq[(Long, Long)], entryK: Int,
       beam: Int, hops: Int, topK: Int): DataFrame = {
-    require(alphas.nonEmpty, "pruneRecallSweepFrom: need an alpha")
-    require(entryK >= 1 && beam >= 1 && hops >= 0 && topK >= 1,
-      s"pruneRecallSweepFrom: entryK=$entryK, beam=$beam, topK=$topK " +
-        s"must be >= 1 (hops=$hops >= 0)")
-    require(topK <= beam,
-      s"pruneRecallSweepFrom: topK=$topK > beam=$beam")
+    val verb = "pruneRecallSweepFrom"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      alphas.map(_ => Descent(beam, 0, hops)))
     alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val perSrc = foldCacheChecked(foldCache, k, None,
-      "pruneRecallSweepFrom")
+    val perSrc = foldCacheChecked(foldCache, k, None, verb)
     // every α's pruned edges stack under a variant key and the WHOLE
     // sweep walks ONCE (the variant walk — one hop chain, one scan of
     // the quantized corpus, instead of a chain per α)
@@ -2322,10 +2400,8 @@ object Similarity {
       rngFold(perSrc, num, den).withColumn("__v", lit(i))
     }.reduce(_.unionByName(_))
     val exactP = exact.transform(graft.util.CacheScope.persist)
-    sweepRecallCost(
-      graphWalk(pruned, base, queries, idCol, vecCol, entryK, beam,
-        hops, keepHops = true, nVariants = alphas.size),
-      exactP, k, topK, alphas)
+    sweepRecallCost(beamWalk(verb, pruned, base, queries, idCol, vecCol,
+      entryK, d, keepHops = true), exactP, k, topK, alphas)
   }
 
   /** Per-variant recall/cost aggregation for a variant walk — the
@@ -2336,17 +2412,7 @@ object Similarity {
     * inner-join semantics, summed), one output row per α. */
   private def sweepRecallCost(walk: GraphWalk, exact: DataFrame,
       k: Int, topK: Int, alphas: Seq[(Long, Long)]): DataFrame = {
-    // a SINGLE-α sweep's walk carries no __v (graphWalk/layeredWalk
-    // collapse the variant machinery at nVariants = 1) but the audit
-    // tail always keys by it — stamp the one variant in (the ADVICE
-    // single-alpha fix; before this, alphas.size == 1 threw an
-    // unresolved-column AnalysisException the requires permitted)
-    val vWalk =
-      if (walk.best.columns.contains("__v")) walk
-      else GraphWalk(walk.best.withColumn("__v", lit(0)),
-        walk.scored.map(_.withColumn("__v", lit(0))),
-        walk.beams.map(_.withColumn("__v", lit(0))))
-    val agg = variantRecallCostAgg(vWalk, exact, topK, alphas.size)
+    val agg = variantRecallCostAgg(walk, exact, topK, alphas.size)
     alphas.zipWithIndex.map { case ((num, den), i) =>
       agg.filter(col("__v") === i)
         .select(lit(num).as("a_num"), lit(den).as("a_den"),
@@ -2364,7 +2430,7 @@ object Similarity {
     * result against the shared exact baseline, eval/frontier totals
     * from the hop frames restricted to the baseline's query spine. */
   private def variantRecallCostAgg(walk: GraphWalk, exact: DataFrame,
-      topK: Int, nVariants: Int): DataFrame = {
+      topK: Int, points: Int): DataFrame = {
     // the audit reads every hop's scored frame two to three times
     // (serve rank + eval totals + frontier's later-hops sum); each
     // frame is bounded (|Q|·nV·hop-fan rows), so one eager
@@ -2373,10 +2439,9 @@ object Similarity {
     // extended to the audit tail)
     val scoredCp = walk.scored.map(df =>
       graft.util.CacheScope.registerCheckpointed(df.localCheckpoint()))
-    val auditWalk = GraphWalk(walk.best, scoredCp, walk.beams)
     val qids = exact.select(col("q_id")).distinct()
       .transform(graft.util.CacheScope.persist)
-    val hits = rankWalk(auditWalk.best, topK, Seq("q_id", "__v"))
+    val hits = rankWalk(walk.best, topK)
       .join(exact.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"),
         "left_semi")
       .groupBy(col("__v")).agg(count(lit(1)).as("hits_total"))
@@ -2385,21 +2450,20 @@ object Similarity {
           .groupBy(col("__v")).agg(count(lit(1)).as("__n")))
         .reduce(_.unionByName(_))
         .groupBy(col("__v")).agg(sum(col("__n")).as(as))
-    val spine = exact.sparkSession.range(nVariants)
+    val spine = exact.sparkSession.range(points)
       .select(col("id").cast("int").as("__v"))
     val frontier =
-      if (auditWalk.beams.isEmpty)
+      if (walk.beams.isEmpty)
         spine.withColumn("frontier_total", lit(0L))
       else spine
-        .join(totals(auditWalk.scored.drop(1), "__later"), Seq("__v"),
-          "left")
-        .join(totals(auditWalk.beams, "__beams"), Seq("__v"), "left")
+        .join(totals(scoredCp.drop(1), "__later"), Seq("__v"), "left")
+        .join(totals(walk.beams, "__beams"), Seq("__v"), "left")
         .select(col("__v"), (coalesce(col("__later"), lit(0L))
           - coalesce(col("__beams"), lit(0L))).as("frontier_total"))
     val nq = qids.agg(count(lit(1)).as("n_queries"))
     spine
       .join(hits, Seq("__v"), "left")
-      .join(totals(auditWalk.scored, "evals_total"), Seq("__v"), "left")
+      .join(totals(scoredCp, "evals_total"), Seq("__v"), "left")
       .join(frontier, Seq("__v"), "left")
       .crossJoin(broadcast(nq))
       .select(col("__v"),
@@ -2425,14 +2489,8 @@ object Similarity {
       exact: DataFrame, k: Int, maxLayer: Int,
       alphas: Seq[(Long, Long)], entryK: Int, beam: Int,
       hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(alphas.nonEmpty,
-      "pruneLayeredRecallSweep: need at least one alpha")
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 && topK >= 1,
-      s"pruneLayeredRecallSweep: entryK=$entryK, beam=$beam, " +
-        s"topK=$topK must be >= 1 (hopsPerLayer=$hopsPerLayer >= 0)")
-    require(topK <= beam,
-      s"pruneLayeredRecallSweep: topK=$topK > beam=$beam — the serve " +
-        "rank runs over the beam-capped frame")
+    walkChecked("pruneLayeredRecallSweep", entryK, Some(topK),
+      capped = true, alphas.map(_ => Descent(beam, maxLayer, hopsPerLayer)))
     alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
     val g = layeredPruneInputChecked(layeredGraph, k, maxLayer,
       alphas.head._1, alphas.head._2)
@@ -2454,29 +2512,20 @@ object Similarity {
       queries: DataFrame, exact: DataFrame, k: Int, maxLayer: Int,
       alphas: Seq[(Long, Long)], entryK: Int, beam: Int,
       hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(alphas.nonEmpty, "pruneLayeredRecallSweepFrom: need an alpha")
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 && topK >= 1,
-      s"pruneLayeredRecallSweepFrom: entryK=$entryK, beam=$beam, " +
-        s"topK=$topK must be >= 1 (hopsPerLayer=$hopsPerLayer >= 0)")
-    require(topK <= beam,
-      s"pruneLayeredRecallSweepFrom: topK=$topK > beam=$beam")
-    require(maxLayer >= 0,
-      s"pruneLayeredRecallSweepFrom: maxLayer=$maxLayer >= 0")
+    val verb = "pruneLayeredRecallSweepFrom"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      alphas.map(_ => Descent(beam, maxLayer, hopsPerLayer)))
     alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
     val keys = Seq("layer", "src")
-    val perSrc = foldCacheChecked(foldCache, k, Some(maxLayer),
-      "pruneLayeredRecallSweepFrom")
+    val perSrc = foldCacheChecked(foldCache, k, Some(maxLayer), verb)
     // every α's pruned stack under a variant key, ONE descent for the
     // whole sweep (the variant walk)
     val pruned = alphas.zipWithIndex.map { case ((num, den), i) =>
       rngFold(perSrc, num, den, keys).withColumn("__v", lit(i))
     }.reduce(_.unionByName(_))
     val exactP = exact.transform(graft.util.CacheScope.persist)
-    sweepRecallCost(
-      layeredWalk(pruned, base, queries, idCol, vecCol, maxLayer,
-        entryK, beam, hopsPerLayer, keepHops = true,
-        nVariants = alphas.size),
-      exactP, k, topK, alphas)
+    sweepRecallCost(beamWalk(verb, pruned, base, queries, idCol, vecCol,
+      entryK, d, keepHops = true), exactP, k, topK, alphas)
   }
 
   /** A whole EQUAL-BUDGET (beam, hopsPerLayer, maxLayer) sweep from
@@ -2484,10 +2533,10 @@ object Similarity {
     * layered table: every sweep point spends the same total hop
     * budget (that is what makes the frontier comparable), so the
     * points differ only in their ENTRY SET, their per-hop LAYER
-    * SCHEDULE, and their BEAM CAP — all of which key by variant: the
-    * edge table fans once through a bounded (layer → (__v, hop))
-    * spine, entries carry __v, and the keep window's cap is a
-    * per-variant CASE. One hop chain (one checkpoint, one expansion
+    * SCHEDULE, and their BEAM CAP — all of which key by variant in
+    * [[beamWalk]]: entries carry __v, each hop's expansion joins the
+    * one edge scan on its variant's layer, and the keep window's cap
+    * is per variant. One hop chain (one checkpoint, one expansion
     * join, one score, one rank exchange per hop) walks every point;
     * the corpus-sized frames are touched once. Per-(q_id, __v)
     * isolation makes it ≡ one [[layeredRecallCost]] per point
@@ -2498,23 +2547,15 @@ object Similarity {
       base: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, exact: DataFrame, k: Int,
       points: Seq[(Int, Int, Int)], entryK: Int, topK: Int): DataFrame = {
-    require(points.nonEmpty, "layeredBeamSweepRecallCost: need points")
-    points.foreach { case (beam, hpl, ml) =>
-      require(beam >= 1 && hpl >= 1 && ml >= 0,
-        s"layeredBeamSweepRecallCost: beam=$beam, hopsPerLayer=$hpl " +
-          s"must be >= 1 (maxLayer=$ml >= 0)")
-      require(topK <= beam,
-        s"layeredBeamSweepRecallCost: topK=$topK > beam=$beam")
+    val verb = "layeredBeamSweepRecallCost"
+    points.foreach { case (_, hpl, _) =>
+      require(hpl >= 1, s"$verb: hopsPerLayer=$hpl must be >= 1")
     }
-    require(topK >= 1 && entryK >= 1,
-      s"layeredBeamSweepRecallCost: topK=$topK, entryK=$entryK >= 1")
-    val budgets = points.map { case (_, hpl, ml) => (ml + 1) * hpl }
-    require(budgets.distinct.size == 1,
-      s"layeredBeamSweepRecallCost: points must spend EQUAL total " +
-        s"hops (the comparable-frontier contract), got $budgets")
-    val walk = scheduledLayeredWalk(layeredGraph, base, queries, idCol,
-      vecCol, points, entryK, budgets.head)
-    val agg = variantRecallCostAgg(walk, exact, topK, points.size)
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      points.map { case (beam, hpl, ml) => Descent(beam, ml, hpl) })
+    val agg = variantRecallCostAgg(beamWalk(verb, layeredGraph, base,
+      queries, idCol, vecCol, entryK, d, keepHops = true), exact, topK,
+      points.size)
     points.zipWithIndex.map { case ((beam, hpl, ml), i) =>
       agg.filter(col("__v") === i)
         .select(lit(beam).as("beam"), lit(hpl).as("hops_per_layer"),
@@ -2523,92 +2564,6 @@ object Similarity {
           expr(s"hits_total * 1000000 DIV ($k * n_queries)")
             .as("recall_micro_mean"))
     }.reduce(_.unionByName(_))
-  }
-
-  /** The hop-SCHEDULED variant walk behind
-    * [[layeredBeamSweepRecallCost]]: variant i's hop h expands layer
-    * maxLayer_i − (h−1) / hopsPerLayer_i edges (the descent schedule
-    * flattened), its entry set is its own top layer's smallest-id
-    * members, and its beam cap is its own — all variant-keyed, one
-    * chain of `hops` hops. Always keepHops (this walk exists for the
-    * audit). */
-  private def scheduledLayeredWalk(layeredGraph: DataFrame,
-      base: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, points: Seq[(Int, Int, Int)], entryK: Int,
-      hops: Int): GraphWalk = {
-    val spark = layeredGraph.sparkSession
-    import spark.implicits._
-    val baseQ = Ivf.quantized(base, idCol, vecCol)
-      .withColumn("__n2", dot(col("qvec"), col("qvec")))
-      .transform(graft.util.CacheScope.persist)
-    val qp = queries.select(col(idCol).as("q_id"),
-        Ivf.quantize(col(vecCol)).as("__qv"))
-      .withColumn("__qn", dot(col("__qv"), col("__qv")))
-    // the (layer → (__v, hop)) schedule spine: bounded (V·H rows),
-    // fans the stored edge scan ONCE instead of per point
-    val schedule = points.zipWithIndex.flatMap {
-      case ((_, hpl, ml), i) =>
-        (1 to hops).map(h => (ml - (h - 1) / hpl, i, h))
-    }.toDF("layer", "__v", "__hop")
-    val edges = layeredGraph.select(col("layer"), col("src"), col("dst"))
-      .join(broadcast(schedule), Seq("layer"))
-      .select(col("__v"), col("__hop"), col("src"), col("dst"))
-      .transform(graft.util.CacheScope.persist)
-    // per-variant entry sets (each point's own top layer; the
-    // fail-loud empty-top-layer probe per DISTINCT top layer)
-    points.map(_._3).distinct.foreach { ml =>
-      require(base.filter(col(idCol) % lit(1L << ml) === 0)
-          .take(1).nonEmpty,
-        s"layeredBeamSweepRecallCost: top layer $ml has no members " +
-          s"(no id ≡ 0 mod ${1L << ml} in the corpus)")
-    }
-    val entries = points.zipWithIndex.map { case ((_, _, ml), i) =>
-      base.filter(col(idCol) % lit(1L << ml) === 0)
-        .select(col(idCol).as("dst"))
-        .orderBy(col("dst").asc).limit(entryK)
-        .withColumn("__v", lit(i))
-    }.reduce(_.unionByName(_))
-    val beamCase = points.zipWithIndex.map { case ((beam, _, _), i) =>
-      s"WHEN $i THEN $beam"
-    }.mkString("CASE __v ", " ", " END")
-    def score(cand: DataFrame): DataFrame =
-      baseQ.select(col("vec_id").as("dst"), col("qvec").as("__dv"),
-          col("__n2").as("__dn"))
-        .join(broadcast(cand), Seq("dst"))
-        .join(broadcast(qp), Seq("q_id"))
-        .withColumn("d2", gridDist2(col("__qn"), col("__qv"),
-          col("__dn"), col("__dv")))
-        .select(col("q_id"), col("__v"), col("dst"), col("d2"))
-    def keep(scored: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("q_id"), col("__v"))
-        .orderBy(col("d2").asc, col("dst").asc)
-      scored.withColumn("__rnk", row_number().over(w))
-        .filter(col("__rnk") <= expr(beamCase)).drop("__rnk")
-    }
-    val s0 = score(
-      qp.select(col("q_id")).crossJoin(broadcast(entries))
-        .filter(col("dst") =!= col("q_id")))
-    var best = keep(s0)
-    val scoredAcc = scala.collection.mutable.ListBuffer(s0)
-    val beamAcc = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // per-hop checkpoints: this walk always keeps its hop frames for
-    // the audit tail, which re-reads every one (the keepHops rule)
-    for (h <- 1 to hops) {
-      val cp = best.localCheckpoint()
-      graft.util.CacheScope.registerCheckpointed(cp)
-      beamAcc += cp
-      val exp = edges.filter(col("__hop") === h)
-        .join(broadcast(cp.select(col("q_id"), col("__v"),
-          col("dst").as("src"))), Seq("__v", "src"))
-        .select(col("q_id"), col("__v"), col("dst"))
-        .filter(col("dst") =!= col("q_id"))
-      val cand = cp.select(col("q_id"), col("__v"), col("dst"))
-        .unionByName(exp).distinct()
-      val sh = score(cand)
-      scoredAcc += sh
-      best = keep(sh)
-    }
-    GraphWalk(best, scoredAcc.toSeq, beamAcc.toSeq)
   }
 
   /** Vertex PURGE with affected-neighbor RE-ELECTION — the q227
@@ -2788,117 +2743,18 @@ object Similarity {
     * long-range moves over few vertices, the base layer refines
     * locally, so arrival needs O(maxLayer · hopsPerLayer) hops where
     * the flat walk needs a hop per traversed vertex. Per-hop state and
-    * exchanges are exactly [[graphSearch]]'s (beam-bounded broadcast
-    * state, one map-side pass over the layer's edge scan + one over
-    * the base scan; checkpoint-rotated). With maxLayer = 0 this IS
-    * [[graphSearch]] (spec-pinned). Output: (q_id, n_id, d2,
-    * rnk ≤ topK). */
-  /** `nVariants` follows the [[graphWalk]] contract: the layered
-    * table carries `__v`, every query fans across the variant spine,
-    * per-layer expansion joins on (__v, src), and the beam window
-    * partitions by (q_id, __v) — N sweep points, ONE descent. */
-  private def layeredWalk(layeredGraph: DataFrame, base: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, maxLayer: Int,
-      entryK: Int, beam: Int, hopsPerLayer: Int,
-      keepHops: Boolean, nVariants: Int = 1): GraphWalk = {
-    val vCols = if (nVariants > 1) Seq(col("__v")) else Nil
-    val vKey = if (nVariants > 1) Seq("__v") else Nil
-    val baseQ = Ivf.quantized(base, idCol, vecCol)
-      .withColumn("__n2", dot(col("qvec"), col("qvec")))
-      .transform(graft.util.CacheScope.persist)
-    val qp = queries.select(col(idCol).as("q_id"),
-        Ivf.quantize(col(vecCol)).as("__qv"))
-      .withColumn("__qn", dot(col("__qv"), col("__qv")))
-    val lg = layeredGraph.select(vCols ++ Seq(col("layer"), col("src"),
-        col("dst")): _*)
-      .transform(graft.util.CacheScope.persist)
-    def score(cand: DataFrame): DataFrame =
-      baseQ.select(col("vec_id").as("dst"), col("qvec").as("__dv"),
-          col("__n2").as("__dn"))
-        .join(broadcast(cand), Seq("dst"))
-        .join(broadcast(qp), Seq("q_id"))
-        .withColumn("d2", gridDist2(col("__qn"), col("__qv"),
-          col("__dn"), col("__dv")))
-        .select((col("q_id") +: vCols) ++ Seq(col("dst"), col("d2")): _*)
-    def keep(scored: DataFrame, n: Int): DataFrame = {
-      val w = Window.partitionBy(col("q_id") +: vCols: _*)
-        .orderBy(col("d2").asc, col("dst").asc)
-      scored.withColumn("__rnk", row_number().over(w))
-        .filter(col("__rnk") <= n).drop("__rnk")
-    }
-    val entries = base
-      .filter(col(idCol) % lit(1L << maxLayer) === 0)
-      .select(col(idCol).as("dst"))
-      .orderBy(col("dst").asc).limit(entryK)
-    // fail-loud, not silently empty: a top layer with no members (a
-    // caller's maxLayer beyond the built graph's promotion range, or a
-    // corpus with no id ≡ 0 mod 2^maxLayer) would empty the entry set
-    // and therefore EVERY result. One bounded probe (≤ entryK rows —
-    // the generation-guard action class), once per descent.
-    require(entries.take(1).nonEmpty,
-      s"layeredWalk: top layer $maxLayer has no members (no id ≡ 0 " +
-        s"mod ${1L << maxLayer} in the corpus) — maxLayer exceeds the " +
-        "built graph's promotion range")
-    val qSpine =
-      if (nVariants > 1)
-        qp.select(col("q_id")).crossJoin(broadcast(
-          layeredGraph.sparkSession.range(nVariants)
-            .select(col("id").cast("int").as("__v"))))
-      else qp.select(col("q_id"))
-    val s0 = score(
-      qSpine.crossJoin(broadcast(entries))
-        .filter(col("dst") =!= col("q_id")))
-    var best = keep(s0, beam)
-    val scoredAcc = scala.collection.mutable.ListBuffer(s0)
-    val beamAcc = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // the graphWalk rotation discipline (r19 cadence: checkpoint every
-    // OTHER hop, release superseded eagerly — plan depth bounded at ≤2
-    // hop layers, half the eager jobs; keepHops retains the
-    // checkpointed ones, off-hop frames stay lazy over them)
-    var lastCheckpoint: Option[DataFrame] = None
-    var hIdx = 0
-    for (l <- maxLayer to 0 by -1; _ <- 1 to hopsPerLayer) {
-      hIdx += 1
-      val doCp = keepHops || hIdx % 2 == 1
-      val cp = if (doCp) best.localCheckpoint() else best
-      if (keepHops) {
-        graft.util.CacheScope.registerCheckpointed(cp)
-        beamAcc += cp
-      } else if (doCp) {
-        lastCheckpoint.foreach(
-          org.apache.spark.sql.graft.Bridge.unpersistCheckpoint)
-        lastCheckpoint = Some(cp)
-      }
-      val exp = lg.filter(col("layer") === l)
-        .select(vCols ++ Seq(col("src"), col("dst")): _*)
-        .join(broadcast(cp.select((col("q_id") +: vCols)
-          :+ col("dst").as("src"): _*)), vKey :+ "src")
-        .select((col("q_id") +: vCols) :+ col("dst"): _*)
-        .filter(col("dst") =!= col("q_id"))
-      val cand = cp.select((col("q_id") +: vCols) :+ col("dst"): _*)
-        .unionByName(exp).distinct()
-      val sh = score(cand)
-      if (keepHops) scoredAcc += sh
-      best = keep(sh, beam)
-    }
-    lastCheckpoint.foreach(graft.util.CacheScope.registerCheckpointed)
-    GraphWalk(best, scoredAcc.toSeq, beamAcc.toSeq)
-  }
-
+    * exchanges are exactly [[graphSearch]]'s (the same [[beamWalk]],
+    * one descent). A top layer with no members fails loud instead of
+    * emptying every result. With maxLayer = 0 this IS [[graphSearch]]
+    * (spec-pinned). Output: (q_id, n_id, d2, rnk ≤ topK). */
   def layeredGraphSearch(layeredGraph: DataFrame, base: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, maxLayer: Int,
       entryK: Int, beam: Int, hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 &&
-        topK >= 1 && maxLayer >= 0,
-      s"layeredGraphSearch: entryK=$entryK, beam=$beam, topK=$topK " +
-        s"must be >= 1 (hopsPerLayer=$hopsPerLayer, " +
-        s"maxLayer=$maxLayer >= 0)")
-    require(topK <= beam,
-      s"layeredGraphSearch: topK=$topK > beam=$beam — the final rank " +
-        "runs over the beam-capped frame")
-    rankWalk(layeredWalk(layeredGraph, base, queries, idCol, vecCol,
-      maxLayer, entryK, beam, hopsPerLayer, keepHops = false).best,
-      topK)
+    val verb = "layeredGraphSearch"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      Seq(Descent(beam, maxLayer, hopsPerLayer)))
+    rankWalk(beamWalk(verb, layeredGraph, base, queries, idCol, vecCol,
+      entryK, d, keepHops = false).best, topK).drop("__v")
   }
 
   /** [[graphSearchMasked]] on the LAYERED descent: the walk routes
@@ -2914,16 +2770,11 @@ object Similarity {
       base: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, tombstones: DataFrame, maxLayer: Int,
       entryK: Int, beam: Int, hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 &&
-        topK >= 1 && maxLayer >= 0,
-      s"layeredGraphSearchMasked: entryK=$entryK, beam=$beam, " +
-        s"topK=$topK must be >= 1 (hopsPerLayer=$hopsPerLayer, " +
-        s"maxLayer=$maxLayer >= 0)")
-    val seen = seenUnion(layeredWalk(layeredGraph, base, queries,
-      idCol, vecCol, maxLayer, entryK, beam, hopsPerLayer,
-      keepHops = true))
-    val dead = tombstones.select(col("vec_id").as("dst")).distinct()
-    rankWalk(seen.join(broadcast(dead), Seq("dst"), "left_anti"), topK)
+    val verb = "layeredGraphSearchMasked"
+    val d = walkChecked(verb, entryK, Some(topK), capped = false,
+      Seq(Descent(beam, maxLayer, hopsPerLayer)))
+    maskedRank(beamWalk(verb, layeredGraph, base, queries, idCol, vecCol,
+      entryK, d, keepHops = true), tombstones, topK)
   }
 
   /** [[graphSearchFiltered]] on the LAYERED descent: walk every layer
@@ -2934,16 +2785,11 @@ object Similarity {
       base: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, predicate: Column, maxLayer: Int, entryK: Int,
       beam: Int, hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 &&
-        topK >= 1 && maxLayer >= 0,
-      s"layeredGraphSearchFiltered: entryK=$entryK, beam=$beam, " +
-        s"topK=$topK must be >= 1 (hopsPerLayer=$hopsPerLayer, " +
-        s"maxLayer=$maxLayer >= 0)")
-    val seen = seenUnion(layeredWalk(layeredGraph, base, queries,
-      idCol, vecCol, maxLayer, entryK, beam, hopsPerLayer,
-      keepHops = true))
-    val keepIds = base.filter(predicate).select(col(idCol).as("dst"))
-    rankWalk(keepIds.join(broadcast(seen), Seq("dst")), topK)
+    val verb = "layeredGraphSearchFiltered"
+    val d = walkChecked(verb, entryK, Some(topK), capped = false,
+      Seq(Descent(beam, maxLayer, hopsPerLayer)))
+    filteredRank(beamWalk(verb, layeredGraph, base, queries, idCol,
+      vecCol, entryK, d, keepHops = true), base, idCol, predicate, topK)
   }
 
   /** [[graphRecallCost]] on the LAYERED descent — the layered family's
@@ -2961,19 +2807,11 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String,
       exact: DataFrame, k: Int, maxLayer: Int, entryK: Int, beam: Int,
       hopsPerLayer: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && hopsPerLayer >= 0 &&
-        topK >= 1 && maxLayer >= 0,
-      s"layeredRecallCost: entryK=$entryK, beam=$beam, topK=$topK " +
-        s"must be >= 1 (hopsPerLayer=$hopsPerLayer, " +
-        s"maxLayer=$maxLayer >= 0)")
-    require(topK <= beam,
-      s"layeredRecallCost: topK=$topK > beam=$beam — the serve rank " +
-        "runs over the beam-capped frame")
-    val walk = layeredWalk(layeredGraph, base, queries, idCol, vecCol,
-      maxLayer, entryK, beam, hopsPerLayer, keepHops = true)
-    recallAudit(rankWalk(walk.best, topK), exact, k)
-      .join(costFromWalk(walk, queries, idCol,
-        (maxLayer + 1) * hopsPerLayer), Seq("q_id"))
+    val verb = "layeredRecallCost"
+    val d = walkChecked(verb, entryK, Some(topK), capped = true,
+      Seq(Descent(beam, maxLayer, hopsPerLayer)))
+    recallCostFromWalk(beamWalk(verb, layeredGraph, base, queries, idCol,
+      vecCol, entryK, d, keepHops = true), queries, idCol, exact, k, topK)
   }
 
   /** LAYERED upsert — [[upsertKnnSeed]] per layer: restated ids purge

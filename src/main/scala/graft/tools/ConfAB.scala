@@ -53,6 +53,7 @@ object ConfAB {
         spark.catalog.clearCache()
         (System.nanoTime() - t0) / 1e9
       }
+      setArm(Seq.empty) // warm under the defaults, not the last arm
       once() // fixtures + warm
       val times = Array.fill(arms.size)(
         scala.collection.mutable.ListBuffer.empty[Double])

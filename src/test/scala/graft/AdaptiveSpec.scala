@@ -9,16 +9,6 @@ import org.apache.spark.sql.functions._
   * rather than assuming defaults. */
 class AdaptiveSpec extends SparkSpec {
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE converts a sort-merge join to broadcast when a filter collapses one side") {
     withConf(
       // static planning must NOT broadcast (estimate = full file size);

@@ -15,19 +15,12 @@ class BloomFilterJoinSpec extends SparkSpec {
 
   test("runtime bloom filter injects into the probe-side scan") {
     val dir = "/root/testdata/sf0.001"
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "8GB")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    withConf(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "8GB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // force a shuffle join: broadcast would bypass the bloom path
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val orders = Tables(spark, dir, "orders")
       val customer = Tables(spark, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
@@ -40,14 +33,13 @@ class BloomFilterJoinSpec extends SparkSpec {
         "runtime bloom filter did not inject — join shape or conf regressed")
       // semantics unchanged vs the broadcast plan
       val n = joined.count()
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      val m = orders.join(broadcast(customer),
-        orders("o_custkey") === customer("c_custkey")).count()
+      val m = withConf(
+          "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+        orders.join(broadcast(customer),
+          orders("o_custkey") === customer("c_custkey")).count()
+      }
       assert(n == m, s"bloom-pruned join returned $n rows vs $m")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 }

@@ -183,9 +183,7 @@ class ShuffleMetricsSpec extends SparkSpec {
     val thresholdKeys = Seq(
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold") // AQE's own knob
-    val prevs = thresholdKeys.map(k => k -> spark.conf.getOption(k))
-    thresholdKeys.foreach(spark.conf.set(_, "-1"))
-    try {
+    withConf(thresholdKeys.map(_ -> "-1"): _*) {
       // aggregate over the OUTPUT columns: a bare count() lets the
       // optimizer drop the row-preserving left joins (known is
       // distinct on fp) and measure a gutted plan
@@ -206,9 +204,6 @@ class ShuffleMetricsSpec extends SparkSpec {
       assert(bloom <= plain - nKnown / 2,
         s"bloom path shuffled $bloom records vs plain $plain " +
           s"($nKnown history fps) — history is crossing an exchange again?")
-    } finally prevs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -512,15 +507,9 @@ class ShuffleMetricsSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val autoK = "spark.sql.autoBroadcastJoinThreshold"
     val adaptK = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    val prevAuto = scala.util.Try(spark.conf.get(autoK)).toOption
-      .filter(_ != null)
-    val prevAdapt = scala.util.Try(spark.conf.get(adaptK)).toOption
-      .filter(_ != null)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     val sdir = java.nio.file.Files
       .createTempDirectory("graft_shuffle_cache").toString
-    try {
+    try withConf(autoK -> "-1", adaptK -> "-1") {
       val coarse = operators.Ivf.centroids(emb, "vec_id", "embedding",
         8, 2)
       operators.Ivf.flatIndex(coarse, emb, "vec_id", "embedding", Nil)
@@ -556,10 +545,6 @@ class ShuffleMetricsSpec extends SparkSpec {
       assert(inc < full,
         s"incremental cache refresh shuffled $inc ≥ full rebuild's $full")
     } finally {
-      prevAuto.fold(spark.conf.unset(autoK))(v =>
-        spark.conf.set(autoK, v))
-      prevAdapt.fold(spark.conf.unset(adaptK))(v =>
-        spark.conf.set(adaptK, v))
       spark.catalog.clearCache()
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm))

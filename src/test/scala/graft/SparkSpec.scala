@@ -34,6 +34,20 @@ trait SparkSpec extends AnyFunSuite {
     assert((rdds -- before._2).isEmpty, s"persistent RDDs left behind: ${rdds -- before._2}")
   }
 
+  /** Run `body` with `pairs` set on the session, then put each key
+    * back as it was (unset if it had no value). The session is shared
+    * by every suite in the JVM, so a conf one test sets must not
+    * outlive it. */
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Payload frame for ChartOps/EpisodeOps parsers. */
   def payloadDf(rows: Seq[(String, String, String)]): DataFrame = {
     val s = spark

@@ -26,16 +26,14 @@ class StreamSessionWindowSpec extends SparkSpec {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("n_events"))
 
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "8") {
       val q = stream.writeStream
         .format("memory").queryName("ssw_sink")
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
 
     val streamed = spark.table("ssw_sink")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet

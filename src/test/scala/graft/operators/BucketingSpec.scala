@@ -13,8 +13,7 @@ class BucketingSpec extends SparkSpec {
 
     // disable auto-broadcast so the join genuinely exercises the
     // co-located sort-merge path (the 100TB fact-to-fact shape)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val bucketed = Bucketing.joinBucketed(spark, "b_orders", "b_customer",
         "o_custkey", "c_custkey")
       bucketed.collect()
@@ -31,7 +30,6 @@ class BucketingSpec extends SparkSpec {
       // and results agree
       assert(bucketed.count() == plain.count())
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_customer")
     }

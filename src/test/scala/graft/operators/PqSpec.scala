@@ -2359,6 +2359,50 @@ class PqSpec extends SparkSpec {
     }
   }
 
+  test("every walk shape leaves the cache as found: checkpoint cadence and release on the 1-D line") {
+    val s = spark
+    import s.implicits._
+    // plain walks checkpoint every other hop and release what each new
+    // checkpoint supersedes (odd and even hop counts end differently);
+    // keepHops walks register every hop — either way the enclosing
+    // scope must end with no cache entry and no persisted RDD added
+    val base = (0L to 9L).map(i => (i, Array(i.toFloat)))
+      .toDF("vec_id", "embedding")
+    val one = Ivf.centroids(base, "vec_id", "embedding", 1, 1)
+    val g = Similarity.knnGraphSeed(one, base, "vec_id", "embedding", 2)
+    val lgLine = Similarity.layeredKnnGraph(base, "vec_id", "embedding",
+      numCoarse = 1, coarseIterations = 1, k = 2, maxLayer = 1)
+    val q = Seq((100L, Array(9.4f))).toDF("vec_id", "embedding")
+    val exact = Seq((100L, 9L), (100L, 8L)).toDF("q_id", "n_id")
+    // start clean: an earlier unscoped walk over this same fixture
+    // leaves entries whose plans equal the ones persisted here, and a
+    // scope releases the shared entry along with its own
+    spark.catalog.clearCache()
+    Seq(g, lgLine).foreach(_.collect())
+    def released(what: String)(
+        run: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = cacheState
+      graft.util.CacheScope.withScope(run.collect())
+      withClue(s"$what: ")(assertCacheAsFound(before))
+    }
+    for (hops <- 0 to 3)
+      released(s"graphSearch hops=$hops")(Similarity.graphSearch(g, base,
+        q, "vec_id", "embedding", entryK = 1, beam = 2, hops = hops,
+        topK = 2))
+    for (hpl <- 1 to 2)
+      released(s"layeredGraphSearch hopsPerLayer=$hpl")(
+        Similarity.layeredGraphSearch(lgLine, base, q, "vec_id",
+          "embedding", maxLayer = 1, entryK = 1, beam = 2,
+          hopsPerLayer = hpl, topK = 2))
+    released("graphSearchMasked")(Similarity.graphSearchMasked(g, base, q,
+      "vec_id", "embedding", base.filter(col("vec_id") === 9L)
+        .select("vec_id"), entryK = 1, beam = 2, hops = 3, topK = 2))
+    released("layeredBeamSweepRecallCost")(
+      Similarity.layeredBeamSweepRecallCost(lgLine, base, q, "vec_id",
+        "embedding", exact, k = 2, points = Seq((2, 2, 0), (2, 1, 1)),
+        entryK = 1, topK = 2))
+  }
+
   test("layered graph: maxLayer 0 ≡ flat walk; members nest; descent beats the flat hop bound") {
     val s = spark
     import s.implicits._

@@ -369,11 +369,9 @@ class SearchSpec extends SparkSpec {
     // and the guard is PLAN-INDEPENDENT: with AQE off (no
     // empty-relation propagation to hide the stats branch) the
     // all-tombstoned serve is still structurally empty, not a raise
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       assert(Search.bm25SearchMasked(tf, dl, stats, all, "doc_id",
         Seq("stream"), topN = 10).isEmpty)
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 }

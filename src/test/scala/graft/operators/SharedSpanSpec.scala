@@ -196,12 +196,8 @@ class SharedSpanSpec extends SparkSpec {
     // kill every automatic broadcast so "shuffle" truly exercises the
     // non-broadcast path — the 100 TB lane where the removal table is
     // corpus-proportional (crawl duplication incidence 30–50%)
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeThreshold =
-      spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val shuffled = run("shuffle")
       val rows = shuffled.orderBy("doc_id").collect().toSeq
       assert(rows == bcast, "shuffle lane diverged from broadcast lane")
@@ -225,14 +221,6 @@ class SharedSpanSpec extends SparkSpec {
         }
       assert(leftOuterBroadcasts.isEmpty,
         "removal join still broadcast under the shuffle pin")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-      aqeThreshold match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
     }
   }
 
@@ -442,12 +430,8 @@ class SharedSpanSpec extends SparkSpec {
     // both lanes must be present or the fixture proves nothing:
     // newly-hot h recomputes (docs 1,2,10), already-hot g keeps (3,4,5)
     assert(auto.map(_.getLong(1)).toSet == Set(1L, 2L, 3L, 4L, 5L, 10L))
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeThreshold =
-      spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val shuffled = run()
       val rows = shuffled.orderBy("doc_id", "start_pos").collect().toSeq
       assert(rows == auto, "shuffle lane diverged from auto lane")
@@ -472,14 +456,6 @@ class SharedSpanSpec extends SparkSpec {
         }
       assert(docIdBroadcasts.isEmpty,
         "a doc_id-keyed join is still pinned broadcast")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-      aqeThreshold match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
     }
   }
 

@@ -53,16 +53,11 @@ class PodchartSourceSpec extends SparkSpec {
     val settings = Seq(
       "fs.pctest.impl" -> classOf[PctestFileSystem].getName,
       "fs.pctest.impl.disable.cache" -> "true")
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(settings: _*) {
       val raw = spark.read.format("podchart").load(s"pctest://$fixtureDir")
       val rows = raw.collect()
       assert(rows.map(_.getString(1)).sorted.toSeq == Seq("de", "us"))
       assert(rows.forall(_.getString(2) == resource("chart_us.json")))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
