@@ -67,10 +67,12 @@ object Graph {
       .transform(graft.util.CacheScope.persist)
     // degree rides the edge list: one persisted (src, dst, deg) frame
     // makes each iteration a single join + sum instead of two joins.
-    // repartition(src) BEFORE the persist: the cached partitioning is
-    // visible to Catalyst, so the per-iteration rank join exchanges
-    // only the O(nodes) rank table — the O(edges) side, the loop
-    // invariant, is never re-shuffled or re-sorted
+    // In q95's executed plan (sf0.001) the degree table broadcasts into
+    // the cached edge scan to build it, each iteration broadcasts its
+    // rank table into the cached (src, dst, deg) scan (`hintRanks`
+    // below), and the only exchange per iteration is the partial Σ by
+    // dst — the O(edges) side, the loop invariant, is never
+    // re-shuffled or re-sorted
     val eDeg = e.join(deg, e("src") === deg("node"))
       .select(col("src"), col("dst"), col("deg"))
       .transform(graft.util.CacheScope.persist)

@@ -32,10 +32,14 @@ object CacheScope {
   private val active = new ThreadLocal[ArrayBuffer[() => Unit]]
 
   /** Persist at MEMORY_AND_DISK and register with the innermost active
-    * scope (no-op registration when no scope is active). */
+    * scope (no-op registration when no scope is active). A frame whose
+    * plan the session already caches is not registered: that entry was
+    * made by someone else (outside the scope, or by an earlier persist
+    * inside it), and its owner releases it. */
   def persist[T](ds: Dataset[T]): Dataset[T] = {
+    val owned = !org.apache.spark.sql.graft.Bridge.isCached(ds)
     ds.persist(StorageLevel.MEMORY_AND_DISK)
-    Option(active.get()).foreach(_ += (() => {
+    if (owned) Option(active.get()).foreach(_ += (() => {
       ds.unpersist(blocking = false); ()
     }))
     ds

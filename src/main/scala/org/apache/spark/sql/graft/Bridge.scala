@@ -53,6 +53,15 @@ object Bridge {
     org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
       .sharedState.cacheManager.numCachedEntries
 
+  /** Whether the session's CacheManager already holds an entry whose
+    * plan matches `ds`'s — `Dataset.persist` then caches nothing new
+    * and the existing entry keeps its owner. */
+  def isCached(ds: org.apache.spark.sql.Dataset[_]): Boolean = {
+    val impl = org.apache.spark.sql.classic.ClassicConversions.castToImpl(ds)
+    impl.sparkSession.sharedState.cacheManager.lookupCachedData(impl)
+      .isDefined
+  }
+
   /** Release the materialized blocks behind a `localCheckpoint`ed
     * frame. `Dataset.unpersist` won't: checkpoint blocks live on the
     * checkpointed RDD, not in the CacheManager, so a superseded

@@ -48,6 +48,37 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * The listener bus is asynchronous, so the count is read once three
+    * 100 ms polls in a row see no change, and jobs still queued from
+    * before `body` are drained the same way before counting starts. */
+  def jobsStarted[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def quiet(): Unit = {
+      var prev = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val now = jobs.get
+        if (now == prev) stable += 1 else { stable = 0; prev = now }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      quiet()
+      jobs.set(0)
+      val out = body
+      quiet()
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Payload frame for ChartOps/EpisodeOps parsers. */
   def payloadDf(rows: Seq[(String, String, String)]): DataFrame = {
     val s = spark

@@ -242,30 +242,10 @@ class HostCurationSpec extends SparkSpec {
     // the opt-out contract: building the plan runs ZERO eager jobs
     // (no slice-census action), and the common-lane numbers are
     // bit-identical to the probing default
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def planned(bound: Long) = {
-      s.sparkContext.addSparkListener(listener)
-      try {
-        jobs.set(0)
-        val out = Curation.hostTokenBudget(docs, "host", "doc_id",
-          "n_tokens", "q_micro", budgetTokens = 100L,
-          sliceRowBound = bound)
-        var prev = -1
-        var stable = 0
-        while (stable < 3) { // three quiet polls = listener bus drained
-          Thread.sleep(100)
-          val now = jobs.get
-          if (now == prev) stable += 1 else { stable = 0; prev = now }
-        }
-        (out, jobs.get)
-      } finally s.sparkContext.removeSparkListener(listener)
-    }
+    def planned(bound: Long) = jobsStarted(
+      Curation.hostTokenBudget(docs, "host", "doc_id",
+        "n_tokens", "q_micro", budgetTokens = 100L,
+        sliceRowBound = bound))
     val (optOut, optOutJobs) = planned(Long.MaxValue)
     assert(optOutJobs == 0,
       s"opt-out still ran $optOutJobs eager probe job(s) at plan time")

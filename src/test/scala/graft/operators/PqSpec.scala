@@ -2374,10 +2374,6 @@ class PqSpec extends SparkSpec {
       numCoarse = 1, coarseIterations = 1, k = 2, maxLayer = 1)
     val q = Seq((100L, Array(9.4f))).toDF("vec_id", "embedding")
     val exact = Seq((100L, 9L), (100L, 8L)).toDF("q_id", "n_id")
-    // start clean: an earlier unscoped walk over this same fixture
-    // leaves entries whose plans equal the ones persisted here, and a
-    // scope releases the shared entry along with its own
-    spark.catalog.clearCache()
     Seq(g, lgLine).foreach(_.collect())
     def released(what: String)(
         run: => org.apache.spark.sql.DataFrame): Unit = {
