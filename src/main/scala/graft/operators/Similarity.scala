@@ -603,6 +603,103 @@ object Similarity {
       pooledVecCol, nprobe, topK)
   }
 
+  /** Exact pair distance from precomputed self-dots + ONE native
+    * cross-dot — the graph family's hot loop: ‖s−d‖² = s·s + d·d −
+    * 2 s·d, every term an exact integer on the grid (all ≪ 2⁵³), so
+    * the value is bit-equal to any other exact form while the
+    * per-pair work is a single codegen'd dot instead of an
+    * interpreted per-element fold (measured ~3× on the Σ cell²
+    * seed). */
+  private def gridDist2(sn: Column, sv: Column, dn: Column,
+      dv: Column): Column =
+    (sn + dn - lit(2.0) * dot(sv, dv)).cast("long")
+
+  /** A stored graph's SHAPE — what the one keyed body of each build
+    * and maintenance verb needs to serve both graph tables. `keys` is
+    * the group key every edge carries ahead of (src, dst, d2, rnk):
+    * Nil for the flat graph, Seq("layer") for the layered one. A flat
+    * graph is a layered graph without the layer key, so every join,
+    * window and fold keys on `keys` plus its own columns and the two
+    * shapes differ only in:
+    *  - `fan`: replicates id-keyed rows to their key groups — the
+    *    identity for flat, [[layeredIndexFan]] for layered;
+    *  - `slice`: projects a stored graph to its edge columns (the
+    *    layered slice also keeps layers 0..maxLayer);
+    *  - `pin`: applied to the index inputs several branches read —
+    *    `CacheScope.persist` for flat (in-plan fixtures are not
+    *    rebuilt per branch), the identity for layered: a pinned fan
+    *    forces a sort-merge join with the FULL pair table through the
+    *    rank exchange (measured 12× the per-layer chains' shuffle at
+    *    spec scale); unpinned, AQE broadcasts the dst side and the
+    *    partial WindowGroupLimit cuts the exchange to ~Σ n_ℓ·k rows;
+    *  - `prune`: the prune verb the shared prune-input messages name.
+    * Flat plans never name a layer: a `layer = 0` predicate on a flat
+    * edge scan makes Spark inject a runtime bloom-filter subquery. */
+  private final case class Shape(keys: Seq[String],
+      fan: DataFrame => DataFrame, slice: DataFrame => DataFrame,
+      pin: DataFrame => DataFrame, prune: String)
+
+  private val flatShape = Shape(Nil, identity,
+    _.select(col("src"), col("dst"), col("d2"), col("rnk")),
+    graft.util.CacheScope.persist, "pruneGraphRng")
+
+  private def layeredShape(maxLayer: Int): Shape = Shape(Seq("layer"),
+    layeredIndexFan(_, maxLayer), layeredGraphSlice(_, maxLayer),
+    identity, "pruneLayeredGraphRng")
+
+  /** The group-key columns, each normalized to int. */
+  private def keyInts(keys: Seq[String]): Seq[Column] =
+    keys.map(k => col(k).cast("int").as(k))
+
+  /** (keys…, src, dst, d2, rnk), every key normalized to int. */
+  private def edgeCols(keys: Seq[String]): Seq[Column] =
+    keyInts(keys) ++ Seq(col("src"), col("dst"), col("d2"), col("rnk"))
+
+  /** The (vec_id, cid, qvec) columns of [[graft.operators.Ivf
+    * .flatIndex]] rows. */
+  private def indexRows(index: DataFrame): DataFrame =
+    index.select(col("vec_id"), col("cid"), col("qvec"))
+
+  /** The distinct ids of a tombstone or batch frame, persisted. */
+  private def distinctIds(df: DataFrame): DataFrame =
+    df.select(col("vec_id")).distinct()
+      .transform(graft.util.CacheScope.persist)
+
+  /** The src and dst sides of a cell-keyed pair join over (keys…,
+    * vec_id, cid, qvec) rows, each vector with its self-dot. */
+  private def srcSide(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.select(keys.map(col) ++ Seq(col("vec_id").as("src"), col("cid"),
+      col("qvec").as("__sv"), dot(col("qvec"), col("qvec")).as("__sn")): _*)
+
+  private def dstSide(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.select(keys.map(col) ++ Seq(col("vec_id").as("dst"), col("cid"),
+      col("qvec").as("__dv"), dot(col("qvec"), col("qvec")).as("__dn")): _*)
+
+  /** Every scored (keys…, src, dst, d2) pair of distinct cell-mates in
+    * one key group. */
+  private def cellPairs(a: DataFrame, b: DataFrame,
+      keys: Seq[String]): DataFrame =
+    a.join(b, keys :+ "cid")
+      .filter(col("src") =!= col("dst"))
+      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
+        col("__dn"), col("__dv")))
+      // drop the vectors BEFORE the rank exchange — the window input
+      // is Σ cell² rows, and two 64-element arrays per row would be
+      // ~40× the (src, dst, d2) payload (the flatIndex lesson)
+      .select(keys.map(col) ++ Seq(col("src"), col("dst"), col("d2")): _*)
+
+  /** Each (keys…, src)'s k nearest in (d2, dst) order:
+    * (keys…, src, dst, d2, rnk ≤ k). */
+  private def electTopK(pairs: DataFrame, keys: Seq[String],
+      k: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col) :+ col("src"): _*)
+      .orderBy(col("d2").asc, col("dst").asc)
+    pairs.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(keys.map(col) ++ Seq(col("src"), col("dst"), col("d2"),
+        col("rnk").cast("int").as("rnk")): _*)
+  }
+
   /** kNN-GRAPH SEED — cell-local exact top-k: every vector's k
     * nearest within its OWN coarse cell (the nprobe = 1 self-join;
     * [[graft.operators.Ivf.flatIndex]] rows joined cell-keyed, never
@@ -619,40 +716,25 @@ object Similarity {
     * report ([[graft.operators.Ivf.cellHealth]]); a skewed report
     * means re-train the coarse codebook (or lean on [[nnDescentRound]]
     * refinement, whose hop fan is k-bounded regardless of balance). */
-  /** Exact pair distance from precomputed self-dots + ONE native
-    * cross-dot — the graph family's hot loop: ‖s−d‖² = s·s + d·d −
-    * 2 s·d, every term an exact integer on the grid (all ≪ 2⁵³), so
-    * the value is bit-equal to any other exact form while the
-    * per-pair work is a single codegen'd dot instead of an
-    * interpreted per-element fold (measured ~3× on the Σ cell²
-    * seed). */
-  private def gridDist2(sn: Column, sv: Column, dn: Column,
-      dv: Column): Column =
-    (sn + dn - lit(2.0) * dot(sv, dv)).cast("long")
-
   def knnGraphSeed(coarse: DataFrame, embeddings: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     require(k >= 1, s"knnGraphSeed: k must be >= 1, got $k")
-    val idx = Ivf.flatIndex(coarse, embeddings, idCol, vecCol, Nil)
-      .withColumn("__n2", dot(col("qvec"), col("qvec")))
-    val a = idx.select(col("vec_id").as("src"), col("cid"),
-      col("qvec").as("__sv"), col("__n2").as("__sn"))
-    val b = idx.select(col("vec_id").as("dst"), col("cid"),
-      col("qvec").as("__dv"), col("__n2").as("__dn"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    a.join(b, Seq("cid"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      // drop the vectors BEFORE the rank exchange — the window input
-      // is Σ cell² rows, and two 64-element arrays per row would be
-      // ~40× the (src, dst, d2) payload (the flatIndex lesson)
-      .select(col("src"), col("dst"), col("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
+    seedKeyed(flatShape, coarse, embeddings, idCol, vecCol, k)
+  }
+
+  /** The seed build of either shape: ONE (keys…, cid)-keyed self-join
+    * over the fanned index + ONE (keys…, src) election window. For the
+    * layered shape this replaces a full seed chain per layer (index
+    * build, cell join, rank exchange) for key-disjoint work (the
+    * round-17 unification; ≡ by per-group disjointness, spec-pinned);
+    * the geometric fan is ≤ 2× rows. */
+  private def seedKeyed(s: Shape, coarse: DataFrame,
+      embeddings: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    val idx = s.fan(indexRows(
+      Ivf.flatIndex(coarse, embeddings, idCol, vecCol, Nil)))
+    electTopK(cellPairs(srcSide(idx, s.keys), dstSide(idx, s.keys),
+      s.keys), s.keys, k)
   }
 
   /** O(new) APPEND for the stored [[knnGraphSeed]] graph — the
@@ -677,58 +759,39 @@ object Similarity {
   def appendKnnSeed(storedGraph: DataFrame, storedIndex: DataFrame,
       batchIndex: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"appendKnnSeed: k must be >= 1, got $k")
-    // both stored inputs feed two branches each (graph: re-elect semi
-    // + passthrough anti; index: grown-cell union + touched slice) —
-    // pinned so in-plan fixtures don't rebuild them per branch
-    // (stored tables just get scan reuse)
-    val sg = storedGraph
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val si = storedIndex.select(col("vec_id"), col("cid"), col("qvec"))
-      .transform(graft.util.CacheScope.persist)
-    val b = batchIndex.select(col("vec_id").as("dst"), col("cid"),
-      col("qvec").as("__dv"),
-      dot(col("qvec"), col("qvec")).as("__dn"))
-      .transform(graft.util.CacheScope.persist)
-    val full = si.select(col("vec_id").as("dst"), col("cid"),
-      col("qvec").as("__dv"),
-      dot(col("qvec"), col("qvec")).as("__dn"))
-      .unionByName(b)
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    def sq(df: DataFrame): DataFrame = df
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      .select(col("src"), col("dst"), col("d2"))
+    appendKeyed(flatShape, storedGraph, storedIndex, batchIndex, k)
+  }
+
+  /** The append of either shape, per key group — one (keys…, cid)-
+    * keyed merge with ONE (keys…, src) election window. */
+  private def appendKeyed(s: Shape, storedGraph: DataFrame,
+      storedIndex: DataFrame, batchIndex: DataFrame, k: Int): DataFrame = {
+    val kc = s.keys.map(col)
+    val bySrc = s.keys :+ "src"
+    // the stored graph and index feed two branches each (graph:
+    // re-elect semi + passthrough anti; index: grown-cell union +
+    // touched slice), the batch's dst side two more
+    val sg = s.slice(storedGraph).transform(graft.util.CacheScope.persist)
+    val si = s.pin(s.fan(indexRows(storedIndex)))
+    val batch = s.fan(indexRows(batchIndex))
+    val b = s.pin(dstSide(batch, s.keys))
     // new vertices: exact top-k within the grown cell
-    val newEdges = sq(batchIndex.select(col("vec_id").as("src"),
-        col("cid"), col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
-      .join(full, Seq("cid")))
+    val newEdges = cellPairs(srcSide(batch, s.keys),
+      dstSide(si, s.keys).unionByName(b), s.keys)
     // old vertices in touched cells: stored top-k ∪ batch cell-mates
-    val touched = si
-      .join(b.select(col("cid")).distinct(), Seq("cid"), "left_semi")
-      .select(col("vec_id").as("src"), col("cid"),
-        col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
+    val touched = srcSide(si.join(b.select(kc :+ col("cid"): _*).distinct(),
+        s.keys :+ "cid", "left_semi"), s.keys)
       .transform(graft.util.CacheScope.persist)
-    val vsBatch = sq(touched.join(b, Seq("cid")))
-    val reElect = sg
-      .join(touched.select(col("src")), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("d2"))
-      .unionByName(vsBatch)
+    val touchedSrc = touched.select(bySrc.map(col): _*)
+    val reElect = sg.join(touchedSrc, bySrc, "left_semi")
+      .select(kc ++ Seq(col("src"), col("dst"), col("d2")): _*)
+      .unionByName(cellPairs(touched, b, s.keys))
     // untouched rows keep their STORED ranks verbatim — re-windowing
     // them would both waste a corpus exchange and recompute what is
     // bit-identical by construction
-    val passthrough = sg
-      .join(touched.select(col("src")), Seq("src"), "left_anti")
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-    reElect.unionByName(newEdges)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
+    val passthrough = sg.join(touchedSrc, bySrc, "left_anti")
+      .select(kc ++ Seq(col("src"), col("dst"), col("d2"), col("rnk")): _*)
+    electTopK(reElect.unionByName(newEdges), s.keys, k)
       .unionByName(passthrough)
   }
 
@@ -779,9 +842,7 @@ object Similarity {
     val baseQ = Ivf.quantized(embeddings, idCol, vecCol)
       .withColumn("__n2", dot(col("qvec"), col("qvec")))
       .transform(graft.util.CacheScope.persist)
-    val w = Window.partitionBy(kc :+ col("src"): _*)
-      .orderBy(col("d2").asc, col("dst").asc)
-    cand
+    electTopK(cand
       .join(baseQ.select(col("vec_id").as("src"),
         col("qvec").as("__sv"), col("__n2").as("__sn")), Seq("src"))
       .join(baseQ.select(col("vec_id").as("dst"),
@@ -789,11 +850,7 @@ object Similarity {
       .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
         col("__dn"), col("__dv")))
       // vectors off before the rank exchange (the knnGraphSeed note)
-      .select(kc ++ Seq(col("src"), col("dst"), col("d2")): _*)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(kc ++ Seq(col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk")): _*)
+      .select(kc ++ Seq(col("src"), col("dst"), col("d2")): _*), keys, k)
   }
 
   /** Seed + `rounds` NN-descent refinements — the whole kNN-graph
@@ -1229,16 +1286,7 @@ object Similarity {
     * anti-join, and rounds checkpoint so the plan stays linear in k.
     * Output: (src, dst, d2, rnk) re-ranked dense over the kept edges
     * — every serve verb walks it unchanged. Rank 1 always survives;
-    * pruning drops edges only, so pruned ⊆ stored (spec-pinned). */
-  def pruneGraphRng(graph: DataFrame, base: DataFrame, idCol: String,
-      vecCol: String, k: Int, alphaNum: Long = 1L,
-      alphaDen: Long = 1L): DataFrame =
-    pruneGraphRngQuantized(graph, Ivf.quantized(base, idCol, vecCol),
-      k, alphaNum, alphaDen)
-
-  /** [[pruneGraphRng]] over an ALREADY-QUANTIZED (vec_id, qvec) frame
-    * — the form the maintenance verbs compose, where the vectors come
-    * from the stored flat-index rows rather than a raw corpus scan.
+    * pruning drops edges only, so pruned ⊆ stored (spec-pinned).
     *
     * Preconditions (fail-loud, not silently wrong): `graph.rnk` must
     * be dense 1..≤k per source — an input whose max rank exceeds `k`
@@ -1246,46 +1294,67 @@ object Similarity {
     * bound neither keep nor consult as covers), so a bounded 1-row
     * probe raises instead. α is capped at 256/256: the cover compare
     * multiplies αNum/αDen into grid d² values (< 2⁵⁵), so bounding α
-    * ≤ 2⁸ makes Long overflow impossible by construction. `quantized`
+    * ≤ 2⁸ makes Long overflow impossible by construction. `base`
     * must cover every vertex the graph references — a missing vector
     * drops its pairs from the cover table, which would mis-read its
     * edges as uncovered (kept). */
-  def pruneGraphRngQuantized(graph: DataFrame, quantized: DataFrame,
-      k: Int, alphaNum: Long = 1L, alphaDen: Long = 1L): DataFrame = {
-    val g = pruneInputChecked(graph, k, alphaNum, alphaDen)
-    val pairD2 = rngPairTable(g, quantized)
-    rngGreedy(g, pairD2, k, alphaNum, alphaDen)
+  def pruneGraphRng(graph: DataFrame, base: DataFrame, idCol: String,
+      vecCol: String, k: Int, alphaNum: Long = 1L,
+      alphaDen: Long = 1L): DataFrame = {
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
+    pruneKeyed(flatShape, graph, base, idCol, vecCol, k,
+      alphaNum.toString, alphaDen.toString)
   }
 
-  /** Shared prune-input validation: parameter requires plus the
-    * bounded 1-row max-rank probe (the ADVICE fail-loud rule — a
-    * stored graph built with a larger k must raise, not truncate).
-    * Returns the persisted (src, dst, d2, rnk) projection every
-    * greedy reads. */
-  private def pruneParamsChecked(k: Int, alphaNum: Long,
-      alphaDen: Long): Unit = {
+  /** The prune of either shape at the α SQL snippets `num`/`den`
+    * ([[rngFoldExpr]]): the probed input, one pair table over the
+    * quantized corpus, and ONE (keys…, src)-keyed fold. */
+  private def pruneKeyed(s: Shape, graph: DataFrame, base: DataFrame,
+      idCol: String, vecCol: String, k: Int, num: String,
+      den: String): DataFrame =
+    rngPrune(pruneInputChecked(s, graph, k),
+        Ivf.quantized(base, idCol, vecCol), s.keys :+ "src", k, num, den)
+      .select(edgeCols(s.keys): _*)
+
+  /** Shared prune-parameter validation: k ≥ 1 and EVERY α a positive
+    * rational ≤ 256/256 (checking only the max of a sweep would let an
+    * α like (0, 1) slip through next to a valid one). */
+  private def pruneParamsChecked(k: Int,
+      alphas: Seq[(Long, Long)]): Unit = {
     require(k >= 1, s"pruneGraphRng: k must be >= 1, got $k")
-    require(alphaNum >= 1 && alphaDen >= 1,
-      s"pruneGraphRng: alpha must be a positive rational, got " +
-        s"$alphaNum/$alphaDen")
-    require(alphaNum <= 256 && alphaDen <= 256,
-      s"pruneGraphRng: alpha bounded to 256/256 (grid d2 < 2^55 " +
-        s"headroom — larger multipliers could overflow Long and " +
-        s"silently flip the cover compare), got $alphaNum/$alphaDen")
+    alphas.foreach { case (alphaNum, alphaDen) =>
+      require(alphaNum >= 1 && alphaDen >= 1,
+        s"pruneGraphRng: alpha must be a positive rational, got " +
+          s"$alphaNum/$alphaDen")
+      require(alphaNum <= 256 && alphaDen <= 256,
+        s"pruneGraphRng: alpha bounded to 256/256 (grid d2 < 2^55 " +
+          s"headroom — larger multipliers could overflow Long and " +
+          s"silently flip the cover compare), got $alphaNum/$alphaDen")
+    }
   }
 
-  private def pruneInputChecked(graph: DataFrame, k: Int,
-      alphaNum: Long, alphaDen: Long): DataFrame = {
-    pruneParamsChecked(k, alphaNum, alphaDen)
-    val g = graph.select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
+  /** The layered prune family's shape, maxLayer checked. */
+  private def prunedLayers(maxLayer: Int): Shape = {
+    require(maxLayer >= 0,
+      s"pruneLayeredGraphRng: maxLayer must be >= 0, got $maxLayer")
+    layeredShape(maxLayer)
+  }
+
+  /** Shared prune-input check: the persisted edge projection every
+    * greedy reads (the shape's slice — for a layered graph, layers
+    * 0..maxLayer) and ONE bounded 1-row max-rank probe for the whole
+    * table (the ADVICE fail-loud rule — a stored graph built with a
+    * larger k must raise, not truncate). */
+  private def pruneInputChecked(s: Shape, graph: DataFrame,
+      k: Int): DataFrame = {
+    val g = s.slice(graph).transform(graft.util.CacheScope.persist)
     // bounded driver action (1 row, partial-combining max over the
     // persisted edge table): rnk past k would silently drop edges
     val maxRnk = g.agg(max(col("rnk"))).head()
     if (!maxRnk.isNullAt(0)) {
       val m = maxRnk.get(0).asInstanceOf[Number].intValue
       require(m <= k,
-        s"pruneGraphRng: graph max rnk $m > k=$k — ranks past k " +
+        s"${s.prune}: graph max rnk $m > k=$k — ranks past k " +
           "would be silently dropped (neither kept nor consulted as " +
           "covers); pass the k the graph was built with")
     }
@@ -1310,7 +1379,7 @@ object Similarity {
     * a per-layer chain each re-paying both (the round-17 q311
     * unification). */
   private def rngPairTable(g: DataFrame, quantized: DataFrame,
-      keys: Seq[String] = Seq("src")): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     val vecs = quantized
       .select(col("vec_id"), col("qvec"),
@@ -1329,9 +1398,10 @@ object Similarity {
       .transform(graft.util.CacheScope.persist)
   }
 
-  /** The RNG/α greedy over a prebuilt [[rngPairTable]]: rank 1 always
-    * survives; rank r keeps its edge iff no already-kept closer
-    * neighbor covers it. Output re-ranked dense over the kept edges.
+  /** The RNG/α greedy over `g`'s pair table against the quantized
+    * vectors `vecs`: rank 1 always survives; rank r keeps its edge iff
+    * no already-kept closer neighbor covers it. Output re-ranked dense
+    * over the kept edges.
     *
     * Shape: the greedy is PER-SOURCE sequential — each source's kept
     * set depends only on its OWN rank list and the pair distances
@@ -1351,11 +1421,10 @@ object Similarity {
     * (the ADVICE guard: without the filter a stored graph built with
     * a larger k would keep-and-consult the extra ranks, a silently
     * mixed discipline; probed entry points pay a no-op filter). */
-  private def rngGreedy(g: DataFrame, pairD2: DataFrame, k: Int,
-      alphaNum: Long, alphaDen: Long,
-      keys: Seq[String] = Seq("src")): DataFrame =
-    rngFold(rngFoldInput(g.filter(col("rnk") <= k), pairD2, keys),
-      alphaNum, alphaDen, keys)
+  private def rngPrune(g: DataFrame, vecs: DataFrame, keys: Seq[String],
+      k: Int, num: String, den: String): DataFrame =
+    rngFoldExpr(rngFoldInput(g.filter(col("rnk") <= k),
+      rngPairTable(g, vecs, keys), keys), num, den, keys)
 
   /** The fold's α-INDEPENDENT input: per group (`keys` — src, or
     * (layer, src)), the rank-sorted neighbor list with each
@@ -1372,7 +1441,7 @@ object Similarity {
     * the row content itself must be deterministic; the fold's exists()
     * never cared about order, so semantics are unchanged. */
   private def rngFoldInput(g: DataFrame, pairD2: DataFrame,
-      keys: Seq[String] = Seq("src")): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     val covers = pairD2.groupBy(kc :+ col("dst"): _*)
       .agg(array_sort(collect_list(struct(col("__w").as("w"),
@@ -1392,11 +1461,23 @@ object Similarity {
                          ELSE 0 END)""").as("__es"))
   }
 
+  /** The probed input of either shape folded ONCE into its
+    * α-independent [[rngFoldInput]] (the pair table + one group
+    * shuffle) — what every sweep point, fold cache and recall sweep
+    * reads. */
+  private def pruneFoldInput(s: Shape, graph: DataFrame, base: DataFrame,
+      idCol: String, vecCol: String, k: Int): DataFrame = {
+    val g = pruneInputChecked(s, graph, k)
+    val keys = s.keys :+ "src"
+    rngFoldInput(g, rngPairTable(g, Ivf.quantized(base, idCol, vecCol),
+      keys), keys)
+  }
+
   /** The in-row greedy: rank-ordered fold with the k-bounded kept
     * accumulator; an edge survives iff no already-kept earlier-rank
     * neighbor α-covers it. Map-only over [[rngFoldInput]]. */
   private def rngFold(perSrc: DataFrame, alphaNum: Long,
-      alphaDen: Long, keys: Seq[String] = Seq("src")): DataFrame =
+      alphaDen: Long, keys: Seq[String]): DataFrame =
     rngFoldExpr(perSrc, alphaNum.toString, alphaDen.toString, keys)
 
   /** [[rngFold]] with the α num/den as SQL SNIPPETS instead of
@@ -1405,7 +1486,7 @@ object Similarity {
     * `layer`), so a MIXED-α build costs exactly the uniform build:
     * same one group shuffle, same map-only fold. */
   private def rngFoldExpr(perSrc: DataFrame, numSql: String,
-      denSql: String, keys: Seq[String] = Seq("src")): DataFrame = {
+      denSql: String, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     perSrc
       .select(kc :+ expr(raw"""
@@ -1440,38 +1521,20 @@ object Similarity {
     * aggressive pruning while the sparse upper scaffolds' few edges
     * are each load-bearing (the HNSW/DiskANN deployment shape). The
     * per-layer α lands as a plan-literal array indexed by the fold
-    * row's `layer`, so the mixed build is the SAME one
-    * (layer, src)-keyed fold as the uniform [[pruneLayeredGraphRng]]
-    * — one pair table, one group shuffle, map-only fold; with all
-    * entries equal it reproduces the uniform build bit-for-bit
-    * (spec-pinned). Output: (layer, src, dst, d2, rnk). */
+    * row's `layer` ([[perLayerAlphaSql]]), so the mixed build is the
+    * SAME one (layer, src)-keyed fold as the uniform
+    * [[pruneLayeredGraphRng]] — one pair table, one group shuffle,
+    * map-only fold; with all entries equal it reproduces the uniform
+    * build bit-for-bit (spec-pinned). Output: (layer, src, dst, d2,
+    * rnk). */
   def pruneLayeredGraphRngPerLayer(layeredGraph: DataFrame,
       base: DataFrame, idCol: String, vecCol: String, k: Int,
       alphas: Seq[(Long, Long)]): DataFrame = {
-    require(alphas.nonEmpty,
-      "pruneLayeredGraphRngPerLayer: need one alpha per layer")
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val maxLayer = alphas.size - 1
-    // bounded 1-row probe (the max-rnk probe's action class, on the
-    // UNFILTERED input): maxLayer here is INFERRED from alphas.size,
-    // and layeredPruneInputChecked filters to 0..maxLayer — without
-    // this probe a graph with more layers than supplied αs would
-    // silently DROP its top layers from the pruned output (the ADVICE
-    // fail-loud rule)
-    layerCountProbed(layeredGraph, maxLayer,
-      "pruneLayeredGraphRngPerLayer", alphas.size)
-    val g = layeredPruneInputChecked(layeredGraph, k, maxLayer,
-      alphas.head._1, alphas.head._2)
-    val keys = Seq("layer", "src")
-    val nums = alphas.map(_._1).mkString(", ")
-    val dens = alphas.map(_._2).mkString(", ")
-    rngFoldExpr(
-      rngFoldInput(g.filter(col("rnk") <= k),
-        rngPairTable(g, Ivf.quantized(base, idCol, vecCol), keys), keys),
-      s"element_at(array($nums), layer + 1)",
-      s"element_at(array($dens), layer + 1)", keys)
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
+    val maxLayer = perLayerChecked(layeredGraph, k, alphas,
+      "pruneLayeredGraphRngPerLayer")
+    val (nums, dens) = perLayerAlphaSql(alphas)
+    pruneKeyed(layeredShape(maxLayer), layeredGraph, base, idCol, vecCol,
+      k, nums, dens)
   }
 
   /** O(changed) maintenance of the PRUNED serving graph — the answer
@@ -1509,82 +1572,78 @@ object Similarity {
       batchIndex: DataFrame, k: Int, alphaNum: Long = 1L,
       alphaDen: Long = 1L): DataFrame = {
     require(k >= 1, s"upsertPrunedKnnSeed: k must be >= 1, got $k")
-    pruneParamsChecked(k, alphaNum, alphaDen)
-    val m = upsertChangedFlat(storedGraph, storedIndex, batchIndex, k)
-    // internal greedy, NO max-rank probe: the graph comes from
-    // upsertKnnSeed(k), so rnk ≤ k holds by construction — the
-    // probe's action would re-pay the semi-join for a precondition
-    // this verb itself establishes
-    val gChanged = m.graph
-      .join(broadcast(m.changed), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val rePruned = rngGreedy(gChanged, rngPairTable(gChanged, m.vecs),
-      k, alphaNum, alphaDen)
-    val passthrough = storedPruned
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .join(broadcast(m.changed), Seq("src"), "left_anti")
-    rePruned.unionByName(passthrough)
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
+    rePruneTail(upsertChanged(flatShape, storedGraph, storedIndex,
+      batchIndex, k), storedPruned, k, alphaNum.toString,
+      alphaDen.toString)
   }
 
   /** The per-source derived state a changed-set maintenance pass
-    * needs: the maintained (checkpointed) graph, the changed-source
-    * frame (src, or (layer, src)), and the post-maintenance quantized
-    * vector table. Shared by the pruned-graph verbs and the
-    * fold-cache refresh verbs — BOTH maintain a table that is a pure
-    * per-source function of (rank list, neighbor vectors), so the
+    * needs: the maintained (checkpointed) graph projected to its edge
+    * columns, the changed-source frame (keys…, src), the
+    * post-maintenance quantized vector table, and the dead ids of a
+    * purge (None for an upsert). Shared by the pruned-graph verbs and
+    * the fold-cache refresh verbs — BOTH maintain a table that is a
+    * pure per-source function of (rank list, neighbor vectors), so the
     * same changed superset serves both. */
-  private final case class MaintChanged(graph: DataFrame,
-      changed: DataFrame, vecs: DataFrame)
+  private final case class MaintChanged(keys: Seq[String],
+      graph: DataFrame, changed: DataFrame, vecs: DataFrame,
+      dead: Option[DataFrame])
 
-  /** The flat UPSERT changed-source superset, factored from
-    * [[upsertPrunedKnnSeed]] (the round-18 fold-cache refresh reuses
-    * it verbatim — same inputs, same argument):
+  /** The UPSERT changed-source superset of either shape, shared by
+    * [[upsertPrunedKnnSeed]], the layered and per-layer-α pruned
+    * upserts and the fold-cache upsert refreshes:
     *
     * CHECKPOINT (not persist) on the upserted graph: truncates the
     * purge∘append tree to an RDD scan so every downstream plan
-    * compiles small. Measured BOTH ways twice: with the round-based
-    * greedy (one action per rank) removal cost 13→178 s; with the
-    * action-free fold greedy a lazy form STILL cost 7→18 s on the
-    * layered gate — the upsert tree is deep enough that even a few
-    * downstream actions re-pay its analysis, and a persist would not
-    * stop that. The rule survives the greedy redesign: checkpoint the
-    * deep input, not persist it.
+    * compiles small — ONE checkpoint for every layer. Measured BOTH
+    * ways twice: with the round-based greedy (one action per rank)
+    * removal cost 13→178 s; with the action-free fold greedy a lazy
+    * form STILL cost 7→18 s on the layered gate — the upsert tree is
+    * deep enough that even a few downstream actions re-pay its
+    * analysis, and a persist would not stop that. The rule survives
+    * the greedy redesign: checkpoint the deep input, not persist it.
     *
-    * The changed-source superset, from the same inputs the upsert
-    * reads: restated/new ids; sources whose stored list contains a
-    * restated dst (their d2s moved); members of every batch-touched
-    * cell under the OLD assignment (storedIndex rows of batch ids) or
-    * the NEW one (batchIndex rows) — the append's re-election set.
-    * The post-upsert vector table = live stored rows ∪ the batch rows
-    * (both already quantized flat-index rows — no corpus re-scan). */
-  private def upsertChangedFlat(storedGraph: DataFrame,
+    * The changed-source superset per key group, from the same inputs
+    * the upsert reads: restated/new ids; sources whose stored list
+    * contains a restated dst (their d2s moved); members of every
+    * batch-touched cell under the OLD assignment (storedIndex rows of
+    * batch ids) or the NEW one (batchIndex rows) — the append's
+    * re-election set. Layer slices come from the shape's fan, so a
+    * layered superset is the flat one per layer. The post-upsert
+    * vector table = live stored rows ∪ the batch rows (both already
+    * quantized flat-index rows — no corpus re-scan), shared across
+    * layers — a layer's pair joins touch only its own vertices. */
+  private def upsertChanged(s: Shape, storedGraph: DataFrame,
       storedIndex: DataFrame, batchIndex: DataFrame,
       k: Int): MaintChanged = {
-    val ids = batchIndex.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
+    val kc = s.keys.map(col)
+    val ids = distinctIds(batchIndex)
     val upserted = graft.util.CacheScope.registerCheckpointed(
-      upsertKnnSeed(storedGraph, storedIndex, batchIndex, k)
+      upsertKeyed(s, storedGraph, storedIndex, batchIndex, k)
         .localCheckpoint())
-    val adj = storedGraph
+    val adj = s.slice(storedGraph)
       .join(broadcast(ids.select(col("vec_id").as("dst"))), Seq("dst"),
         "left_semi")
-      .select(col("src"))
-    val cells = storedIndex
+      .select(kc :+ col("src"): _*)
+    val index = s.fan(storedIndex)
+    val cells = index
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .select(col("cid"))
-      .unionByName(batchIndex.select(col("cid")))
+      .select(kc :+ col("cid"): _*)
+      .unionByName(s.fan(batchIndex).select(kc :+ col("cid"): _*))
       .distinct()
-    val members = storedIndex
-      .join(broadcast(cells), Seq("cid"), "left_semi")
-      .select(col("vec_id").as("src"))
-    val changed = ids.select(col("vec_id").as("src"))
+    val members = index
+      .join(broadcast(cells), s.keys :+ "cid", "left_semi")
+      .select(kc :+ col("vec_id").as("src"): _*)
+    val changed = s.fan(ids).select(kc :+ col("vec_id").as("src"): _*)
       .unionByName(adj).unionByName(members).distinct()
+      .select(keyInts(s.keys) :+ col("src"): _*)
       .transform(graft.util.CacheScope.persist)
     val vecs = storedIndex.select(col("vec_id"), col("qvec"))
       .join(broadcast(ids), Seq("vec_id"), "left_anti")
       .unionByName(batchIndex.select(col("vec_id"), col("qvec")))
-    MaintChanged(upserted, changed, vecs)
+    MaintChanged(s.keys, upserted.select(edgeCols(s.keys): _*), changed,
+      vecs, None)
   }
 
   /** O(deleted) maintenance of the PRUNED serving graph under
@@ -1606,51 +1665,71 @@ object Similarity {
       storedPruned: DataFrame, storedIndex: DataFrame,
       tombstones: DataFrame, k: Int, alphaNum: Long = 1L,
       alphaDen: Long = 1L): DataFrame = {
-    pruneParamsChecked(k, alphaNum, alphaDen)
-    val (dead, m) = purgeChangedFlat(storedGraph, storedIndex,
-      tombstones, k)
-    // internal greedy, no max-rank probe: purgeKnnGraph(k) built the
-    // graph, so rnk ≤ k by construction
-    val gChanged = m.graph
-      .join(broadcast(m.changed), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val rePruned = rngGreedy(gChanged, rngPairTable(gChanged, m.vecs),
-      k, alphaNum, alphaDen)
-    val passthrough = storedPruned
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(m.changed), Seq("src"), "left_anti")
-    rePruned.unionByName(passthrough)
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
+    rePruneTail(purgeChanged(flatShape, storedGraph, storedIndex,
+      tombstones, k), storedPruned, k, alphaNum.toString,
+      alphaDen.toString)
   }
 
-  /** The flat PURGE changed set, factored from [[purgePrunedKnnGraph]]
-    * (the fold-cache refresh reuses it): here the changed set is not a
+  /** The PURGE changed set of either shape, shared by the pruned and
+    * fold-cache purge verbs: here the changed set is not a
     * conservative superset but the EXACT re-election set — deletion
     * never changes a surviving vector, so a survivor's per-source rows
-    * can change only if its rank list changed, and [[purgeKnnGraph]]
-    * changes rank lists exactly for the sources adjacent to a deleted
-    * dst. Checkpoints the deep purge∘re-elect tree (the standing
-    * rule). Returns (dead ids, [[MaintChanged]]). */
-  private def purgeChangedFlat(storedGraph: DataFrame,
+    * can change only if its rank list changed, and the purge changes
+    * rank lists exactly for the (keys…, src) groups adjacent to a
+    * deleted dst. Checkpoints the deep purge∘re-elect tree once (the
+    * standing rule); the vector table is the survivors'. */
+  private def purgeChanged(s: Shape, storedGraph: DataFrame,
       storedIndex: DataFrame, tombstones: DataFrame,
-      k: Int): (DataFrame, MaintChanged) = {
-    val dead = tombstones.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
+      k: Int): MaintChanged = {
+    val dead = distinctIds(tombstones)
     val purged = graft.util.CacheScope.registerCheckpointed(
-      purgeKnnGraph(storedGraph, storedIndex, tombstones, k)
+      purgeKeyed(s, storedGraph, storedIndex, tombstones, k)
         .localCheckpoint())
-    val changed = storedGraph
+    val changed = s.slice(storedGraph)
       .join(broadcast(dead.select(col("vec_id").as("dst"))),
         Seq("dst"), "left_semi")
-      .select(col("src")).distinct()
+      .select(s.keys.map(col) :+ col("src"): _*).distinct()
       .join(broadcast(dead.select(col("vec_id").as("src"))),
         Seq("src"), "left_anti")
       .transform(graft.util.CacheScope.persist)
     val vecs = storedIndex.select(col("vec_id"), col("qvec"))
       .join(broadcast(dead), Seq("vec_id"), "left_anti")
-    (dead, MaintChanged(purged, changed, vecs))
+    MaintChanged(s.keys, purged.select(edgeCols(s.keys): _*), changed,
+      vecs, Some(dead))
+  }
+
+  /** The changed groups' rows of the maintained graph, persisted: the
+    * pair table and the fold input both read them. No max-rank probe
+    * — the graph comes from a k-bounded builder inside the changed-set
+    * derivation, so rnk ≤ k holds by construction and the fold's
+    * truncation filter defines it. */
+  private def changedEdges(m: MaintChanged): DataFrame =
+    m.graph.join(broadcast(m.changed), m.keys :+ "src", "left_semi")
+      .transform(graft.util.CacheScope.persist)
+
+  /** A stored per-source table's rows for the live, UNCHANGED groups —
+    * dead sources drop, changed groups drop (they are recomputed), the
+    * rest pass through verbatim. */
+  private def unchanged(stored: DataFrame, m: MaintChanged): DataFrame =
+    m.dead.fold(stored)(d =>
+        stored.join(broadcast(d.select(col("vec_id").as("src"))),
+          Seq("src"), "left_anti"))
+      .join(broadcast(m.changed), m.keys :+ "src", "left_anti")
+
+  /** The shared tail of the six pruned-graph maintenance verbs (flat,
+    * layered and per-layer α; upsert and purge): the changed groups'
+    * rows re-prune in ONE (keys…, src)-keyed fold at the α SQL
+    * snippets `num`/`den` — literals for a uniform α,
+    * [[perLayerAlphaSql]] for per-layer αs, so each changed row folds
+    * at ITS layer's committed α — and every other live group's stored
+    * pruned rows pass through verbatim. */
+  private def rePruneTail(m: MaintChanged, storedPruned: DataFrame,
+      k: Int, num: String, den: String): DataFrame = {
+    val g = changedEdges(m)
+    rngPrune(g, m.vecs, m.keys :+ "src", k, num, den)
+      .unionByName(unchanged(storedPruned.select(edgeCols(m.keys): _*), m))
+      .select(edgeCols(m.keys): _*)
   }
 
   /** O(changed) maintenance of the PRUNED LAYERED serving graph —
@@ -1661,45 +1740,25 @@ object Similarity {
     * — but the re-prune greedy is per-(layer, src) sequential, so the
     * layers JOIN THE FOLD KEY instead of mapping the flat verb per
     * layer. One [[upsertLayeredKnnSeed]] checkpoint (was one per
-    * layer), one per-layer changed-source superset stacked into a
-    * (layer, src) frame, ONE pair table + ONE group shuffle for every
-    * layer's re-prune, verbatim passthrough per (layer, src). The
-    * changed superset per layer is the flat verb's, over that layer's
-    * member slices: restated member ids ∪ member sources adjacent to
-    * a restated dst ∪ member occupants of every batch-touched cell
-    * under the old or new assignment. `storedIndex`/`batchIndex` are
-    * FULL-corpus [[graft.operators.Ivf.flatIndex]] rows (layer slices
-    * are id-arithmetic scan filters, the [[appendLayeredKnnSeed]]
-    * convention); the post-upsert vector table is shared across
-    * layers — a layer's pair joins touch only its own vertices.
-    * ≡ the full per-layer re-prune of the restated rebuild (the gate
-    * oracle); same stored-table α/coverage preconditions as
-    * [[upsertPrunedKnnSeed]]. */
+    * layer), the changed-source superset keyed (layer, src)
+    * ([[upsertChanged]]), ONE pair table + ONE group shuffle for every
+    * layer's re-prune, verbatim passthrough per (layer, src).
+    * `storedIndex`/`batchIndex` are FULL-corpus
+    * [[graft.operators.Ivf.flatIndex]] rows (layer slices come from
+    * the [[layeredIndexFan]], the [[appendLayeredKnnSeed]]
+    * convention). ≡ the full per-layer re-prune of the restated
+    * rebuild (the gate oracle); same stored-table α/coverage
+    * preconditions as [[upsertPrunedKnnSeed]]. */
   def upsertPrunedLayeredKnnSeed(storedLayered: DataFrame,
       storedPrunedLayered: DataFrame, storedIndex: DataFrame,
       batchIndex: DataFrame, k: Int, maxLayer: Int,
       alphaNum: Long = 1L, alphaDen: Long = 1L): DataFrame = {
-    pruneParamsChecked(k, alphaNum, alphaDen)
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
     require(maxLayer >= 0,
       s"upsertPrunedLayeredKnnSeed: maxLayer must be >= 0, got $maxLayer")
-    val m = upsertChangedLayered(storedLayered, storedIndex,
-      batchIndex, k, maxLayer)
-    val keys = Seq("layer", "src")
-    // internal greedy: rnk ≤ k by construction (upsertLayeredKnnSeed
-    // inside the changed-set derivation), so no probe — rngGreedy's
-    // truncation filter defines it
-    val gChanged = m.graph
-      .join(broadcast(m.changed), keys, "left_semi")
-      .transform(graft.util.CacheScope.persist)
-    val rePruned = rngGreedy(gChanged, rngPairTable(gChanged, m.vecs,
-      keys), k, alphaNum, alphaDen, keys)
-    val passthrough = storedPrunedLayered
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-      .join(broadcast(m.changed), keys, "left_anti")
-    rePruned.unionByName(passthrough)
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
+    rePruneTail(upsertChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, batchIndex, k), storedPrunedLayered, k,
+      alphaNum.toString, alphaDen.toString)
   }
 
   /** O(deleted) maintenance of the PRUNED LAYERED serving graph —
@@ -1709,10 +1768,10 @@ object Similarity {
     * [[purgeLayeredKnnGraph]] composed with a re-prune of ONLY the
     * (layer, src) pairs it re-elected — deletion never changes a
     * surviving vector, so per layer the changed set is the EXACT
-    * adjacency set ([[purgeChangedLayered]], the same derivation the
-    * layered fold-cache purge-refresh shares), folded for ALL layers
-    * in ONE (layer, src)-keyed pass over one pair table. Every other
-    * live (layer, src)'s stored pruned rows pass through verbatim (a
+    * adjacency set ([[purgeChanged]], the same derivation the
+    * fold-cache purge-refresh shares), folded for ALL layers in ONE
+    * (layer, src)-keyed pass over one pair table. Every other live
+    * (layer, src)'s stored pruned rows pass through verbatim (a
     * pruned row with a dead dst cannot reach the passthrough —
     * pruned ⊆ stored makes its src adjacent in that layer). ≡ the
     * full per-layer re-prune of the purged rebuild (the gate oracle);
@@ -1722,28 +1781,12 @@ object Similarity {
       storedPrunedLayered: DataFrame, storedIndex: DataFrame,
       tombstones: DataFrame, k: Int, maxLayer: Int,
       alphaNum: Long = 1L, alphaDen: Long = 1L): DataFrame = {
-    pruneParamsChecked(k, alphaNum, alphaDen)
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
     require(maxLayer >= 0,
       s"purgePrunedLayeredKnnGraph: maxLayer must be >= 0, got $maxLayer")
-    val (dead, m) = purgeChangedLayered(storedLayered, storedIndex,
-      tombstones, k, maxLayer)
-    val keys = Seq("layer", "src")
-    // internal greedy: rnk ≤ k by construction (purgeLayeredKnnGraph
-    // inside the changed-set derivation), so no probe
-    val gChanged = m.graph
-      .join(broadcast(m.changed), keys, "left_semi")
-      .transform(graft.util.CacheScope.persist)
-    val rePruned = rngGreedy(gChanged, rngPairTable(gChanged, m.vecs,
-      keys), k, alphaNum, alphaDen, keys)
-    val passthrough = storedPrunedLayered
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(m.changed), keys, "left_anti")
-    rePruned.unionByName(passthrough)
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
+    rePruneTail(purgeChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, tombstones, k), storedPrunedLayered, k,
+      alphaNum.toString, alphaDen.toString)
   }
 
   /** The per-layer α SQL snippets for a keyed fold: layer ℓ's α lands
@@ -1770,16 +1813,11 @@ object Similarity {
       storedPrunedLayered: DataFrame, storedIndex: DataFrame,
       batchIndex: DataFrame, k: Int,
       alphas: Seq[(Long, Long)]): DataFrame = {
-    require(alphas.nonEmpty,
-      "upsertPrunedLayeredKnnSeedPerLayer: need one alpha per layer")
-    alphas.foreach { case (n, d) => pruneParamsChecked(k, n, d) }
-    val maxLayer = alphas.size - 1
-    layerCountProbed(storedLayered, maxLayer,
-      "upsertPrunedLayeredKnnSeedPerLayer", alphas.size)
-    val m = upsertChangedLayered(storedLayered, storedIndex,
-      batchIndex, k, maxLayer)
-    perLayerRePruneWithPassthrough(m, storedPrunedLayered, None, k,
-      alphas)
+    val maxLayer = perLayerChecked(storedLayered, k, alphas,
+      "upsertPrunedLayeredKnnSeedPerLayer")
+    val (nums, dens) = perLayerAlphaSql(alphas)
+    rePruneTail(upsertChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, batchIndex, k), storedPrunedLayered, k, nums, dens)
   }
 
   /** [[purgePrunedLayeredKnnGraph]] at MIXED per-layer αs — the
@@ -1788,106 +1826,34 @@ object Similarity {
       storedPrunedLayered: DataFrame, storedIndex: DataFrame,
       tombstones: DataFrame, k: Int,
       alphas: Seq[(Long, Long)]): DataFrame = {
-    require(alphas.nonEmpty,
-      "purgePrunedLayeredKnnGraphPerLayer: need one alpha per layer")
-    alphas.foreach { case (n, d) => pruneParamsChecked(k, n, d) }
-    val maxLayer = alphas.size - 1
-    layerCountProbed(storedLayered, maxLayer,
-      "purgePrunedLayeredKnnGraphPerLayer", alphas.size)
-    val (dead, m) = purgeChangedLayered(storedLayered, storedIndex,
-      tombstones, k, maxLayer)
-    perLayerRePruneWithPassthrough(m, storedPrunedLayered, Some(dead),
-      k, alphas)
+    val maxLayer = perLayerChecked(storedLayered, k, alphas,
+      "purgePrunedLayeredKnnGraphPerLayer")
+    val (nums, dens) = perLayerAlphaSql(alphas)
+    rePruneTail(purgeChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, tombstones, k), storedPrunedLayered, k, nums, dens)
   }
 
-  /** Bounded 1-row max-layer probe (the q323 fail-loud rule shared by
-    * the per-layer maintenance verbs): a stored graph with more
-    * layers than supplied αs must raise, not silently drop them. */
-  private def layerCountProbed(layeredGraph: DataFrame, maxLayer: Int,
-      verb: String, nAlphas: Int): Unit = {
+  /** The argument check of the three per-layer-α verbs: one valid α
+    * per layer, and a bounded 1-row max-layer probe (the q323
+    * fail-loud rule; the max-rnk probe's action class, on the
+    * UNFILTERED input): maxLayer is INFERRED from alphas.size and the
+    * layered slice keeps layers 0..maxLayer, so a stored graph with
+    * more layers than supplied αs must raise, not silently drop its
+    * top layers. Returns maxLayer. */
+  private def perLayerChecked(layeredGraph: DataFrame, k: Int,
+      alphas: Seq[(Long, Long)], verb: String): Int = {
+    require(alphas.nonEmpty, s"$verb: need one alpha per layer")
+    pruneParamsChecked(k, alphas)
+    val maxLayer = alphas.size - 1
     val topRow = layeredGraph.agg(max(col("layer"))).head()
     if (!topRow.isNullAt(0)) {
       val top = topRow.get(0).asInstanceOf[Number].intValue
       require(top <= maxLayer,
-        s"$verb: graph has layers up to $top but only $nAlphas " +
+        s"$verb: graph has layers up to $top but only ${alphas.size} " +
           s"alphas were supplied (layers 0..$maxLayer) — layers above " +
           "would be silently dropped; pass one alpha per layer")
     }
-  }
-
-  /** The shared re-prune + passthrough tail of the per-layer-α
-    * maintenance verbs: changed (layer, src) rows fold at their
-    * layer's α, dead sources (purge direction) drop, everyone else
-    * passes through verbatim. */
-  private def perLayerRePruneWithPassthrough(m: MaintChanged,
-      storedPrunedLayered: DataFrame, dead: Option[DataFrame], k: Int,
-      alphas: Seq[(Long, Long)]): DataFrame = {
-    val keys = Seq("layer", "src")
-    val gChanged = m.graph
-      .join(broadcast(m.changed), keys, "left_semi")
-      .transform(graft.util.CacheScope.persist)
-    val (nums, dens) = perLayerAlphaSql(alphas)
-    val rePruned = rngFoldExpr(
-      rngFoldInput(gChanged.filter(col("rnk") <= k),
-        rngPairTable(gChanged, m.vecs, keys), keys), nums, dens, keys)
-    val stored = storedPrunedLayered
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-    val live = dead.fold(stored)(d =>
-      stored.join(broadcast(d.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti"))
-    rePruned
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk").cast("int").as("rnk"))
-      .unionByName(live.join(broadcast(m.changed), keys, "left_anti"))
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-  }
-
-  /** The LAYERED upsert changed set, factored from
-    * [[upsertPrunedLayeredKnnSeed]] (the layered fold-cache refresh
-    * reuses it): ONE checkpoint of the whole layered upsert tree (the
-    * standing checkpoint-the-deep-input rule; the per-layer form paid
-    * three), the per-layer changed-source superset stacked into a
-    * (layer, src) frame — the flat verb's superset over each layer's
-    * member slices — and the shared post-upsert vector table.
-    * `graph` comes back projected to (layer:int, src, dst, d2, rnk). */
-  private def upsertChangedLayered(storedLayered: DataFrame,
-      storedIndex: DataFrame, batchIndex: DataFrame, k: Int,
-      maxLayer: Int): MaintChanged = {
-    val ids = batchIndex.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    val upserted = graft.util.CacheScope.registerCheckpointed(
-      upsertLayeredKnnSeed(storedLayered, storedIndex, batchIndex, k,
-        maxLayer).localCheckpoint())
-    val changed = (0 to maxLayer).map { l =>
-      val member = col("vec_id") % lit(1L << l) === 0
-      val idsL = ids.filter(member)
-      val adj = storedLayered.filter(col("layer") === l)
-        .join(broadcast(idsL.select(col("vec_id").as("dst"))),
-          Seq("dst"), "left_semi")
-        .select(col("src"))
-      val cells = storedIndex.filter(member)
-        .join(broadcast(idsL), Seq("vec_id"), "left_semi")
-        .select(col("cid"))
-        .unionByName(batchIndex.filter(member).select(col("cid")))
-        .distinct()
-      val members = storedIndex.filter(member)
-        .join(broadcast(cells), Seq("cid"), "left_semi")
-        .select(col("vec_id").as("src"))
-      idsL.select(col("vec_id").as("src"))
-        .unionByName(adj).unionByName(members).distinct()
-        .withColumn("layer", lit(l))
-    }.reduce(_.unionByName(_))
-      .select(col("layer").cast("int").as("layer"), col("src"))
-      .transform(graft.util.CacheScope.persist)
-    val vecs = storedIndex.select(col("vec_id"), col("qvec"))
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .unionByName(batchIndex.select(col("vec_id"), col("qvec")))
-    MaintChanged(
-      upserted.select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk")),
-      changed, vecs)
+    maxLayer
   }
 
   /** Per-LAYER RNG/α pruning for the layered (HNSW-shape) graph —
@@ -1905,38 +1871,10 @@ object Similarity {
   def pruneLayeredGraphRng(layeredGraph: DataFrame, base: DataFrame,
       idCol: String, vecCol: String, k: Int, maxLayer: Int,
       alphaNum: Long = 1L, alphaDen: Long = 1L): DataFrame = {
-    val g = layeredPruneInputChecked(layeredGraph, k, maxLayer,
-      alphaNum, alphaDen)
-    val vecs = Ivf.quantized(base, idCol, vecCol)
-    val keys = Seq("layer", "src")
-    rngGreedy(g, rngPairTable(g, vecs, keys), k, alphaNum, alphaDen,
-        keys)
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-  }
-
-  /** [[pruneInputChecked]] for the layered family: one persisted
-    * (layer, src, dst, d2, rnk) projection over layers 0..maxLayer
-    * and ONE bounded max-rank probe for the whole table (the
-    * per-layer form paid the probe's action per layer). */
-  private def layeredPruneInputChecked(layeredGraph: DataFrame, k: Int,
-      maxLayer: Int, alphaNum: Long, alphaDen: Long): DataFrame = {
-    require(maxLayer >= 0,
-      s"pruneLayeredGraphRng: maxLayer must be >= 0, got $maxLayer")
-    pruneParamsChecked(k, alphaNum, alphaDen)
-    val g = layeredGraph.filter(col("layer").between(0, maxLayer))
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val maxRnk = g.agg(max(col("rnk"))).head()
-    if (!maxRnk.isNullAt(0)) {
-      val m = maxRnk.get(0).asInstanceOf[Number].intValue
-      require(m <= k,
-        s"pruneLayeredGraphRng: graph max rnk $m > k=$k — ranks past " +
-          "k would be silently dropped (neither kept nor consulted " +
-          "as covers); pass the k the graph was built with")
-    }
-    g
+    val s = prunedLayers(maxLayer)
+    pruneParamsChecked(k, Seq(alphaNum -> alphaDen))
+    pruneKeyed(s, layeredGraph, base, idCol, vecCol, k,
+      alphaNum.toString, alphaDen.toString)
   }
 
   /** [[pruneGraphRng]] across a WHOLE α sweep — the q240/q271 tuning
@@ -1949,39 +1887,17 @@ object Similarity {
     * set feeds later cover checks, so a looser cover can drop an
     * early edge whose absence then SAVES a later one — which is why
     * this is measured, not derived. The corpus quantizes ONCE and the
-    * α-independent [[rngPairTable]] builds ONCE, shared across every
-    * sweep point — only the k-bounded greedy reruns per α (the
-    * per-α-rebuild form re-paid the two corpus-vector joins for every
-    * point). Output: (a_num, a_den, n_edges, n_srcs, max_degree), one
-    * row per α. */
+    * α-independent fold input ([[pruneFoldInput]]: pair table + group
+    * shuffle) builds ONCE, shared across every sweep point — only the
+    * map-only fold reruns per α (the per-α-rebuild form re-paid the
+    * two corpus-vector joins for every point). Output: (a_num, a_den,
+    * n_edges, n_srcs, max_degree), one row per α. */
   def pruneSweep(graph: DataFrame, base: DataFrame, idCol: String,
-      vecCol: String, k: Int, alphas: Seq[(Long, Long)]): DataFrame =
-    pruneSweepQuantized(graph, Ivf.quantized(base, idCol, vecCol), k,
-      alphas)
-
-  /** [[pruneSweep]] over an already-quantized (vec_id, qvec) frame —
-    * the shared-pair-table core, also the per-layer unit of
-    * [[pruneLayeredSweep]]. */
-  def pruneSweepQuantized(graph: DataFrame, quantized: DataFrame,
-      k: Int, alphas: Seq[(Long, Long)]): DataFrame = {
+      vecCol: String, k: Int, alphas: Seq[(Long, Long)]): DataFrame = {
     require(alphas.nonEmpty, "pruneSweep: need at least one alpha")
-    // EVERY sweep point validates (checking only the max would let an
-    // α like (0, 1) slip through next to a valid one)
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val g = pruneInputChecked(graph, k, alphas.head._1, alphas.head._2)
-    // the fold input is α-independent: ONE src-keyed shuffle shared
-    // across the whole sweep; each α is then a map-only fold
-    val perSrc = rngFoldInput(g, rngPairTable(g, quantized))
-      .transform(graft.util.CacheScope.persist)
-    alphas.map { case (num, den) =>
-      rngFold(perSrc, num, den)
-        .groupBy(col("src")).agg(count(lit(1)).as("__d"))
-        .agg(sum(col("__d")).as("n_edges"),
-          count(lit(1)).as("n_srcs"),
-          max(col("__d")).as("max_degree"))
-        .select(lit(num).as("a_num"), lit(den).as("a_den"),
-          col("n_edges"), col("n_srcs"), col("max_degree"))
-    }.reduce(_.unionByName(_))
+    pruneParamsChecked(k, alphas)
+    pruneCensus(pruneFoldInput(flatShape, graph, base, idCol, vecCol, k)
+      .transform(graft.util.CacheScope.persist), Nil, alphas, identity)
   }
 
   /** [[pruneSweep]]'s census served from a STORED [[pruneFoldCache]]
@@ -1991,17 +1907,9 @@ object Similarity {
   def pruneSweepFrom(foldCache: DataFrame, k: Int,
       alphas: Seq[(Long, Long)]): DataFrame = {
     require(alphas.nonEmpty, "pruneSweepFrom: need at least one alpha")
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val perSrc = foldCacheChecked(foldCache, k, None, "pruneSweepFrom")
-    alphas.map { case (num, den) =>
-      rngFold(perSrc, num, den)
-        .groupBy(col("src")).agg(count(lit(1)).as("__d"))
-        .agg(sum(col("__d")).as("n_edges"),
-          count(lit(1)).as("n_srcs"),
-          max(col("__d")).as("max_degree"))
-        .select(lit(num).as("a_num"), lit(den).as("a_den"),
-          col("n_edges"), col("n_srcs"), col("max_degree"))
-    }.reduce(_.unionByName(_))
+    pruneParamsChecked(k, alphas)
+    pruneCensus(foldCacheChecked(foldCache, k, None, "pruneSweepFrom"),
+      Nil, alphas, identity)
   }
 
   /** [[pruneLayeredSweep]]'s per-(layer, α) census from a STORED
@@ -2014,27 +1922,10 @@ object Similarity {
       "pruneLayeredSweepFrom: need at least one alpha")
     require(maxLayer >= 0,
       s"pruneLayeredSweepFrom: maxLayer must be >= 0, got $maxLayer")
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val keys = Seq("layer", "src")
-    val perSrc = foldCacheChecked(foldCache, k, Some(maxLayer),
-      "pruneLayeredSweepFrom")
-    val spine = foldCache.sparkSession.range(0, maxLayer + 1L)
-      .select(col("id").cast("int").as("layer"))
-    alphas.map { case (num, den) =>
-      val census = rngFold(perSrc, num, den, keys)
-        .groupBy(col("layer"), col("src")).agg(count(lit(1)).as("__d"))
-        .groupBy(col("layer"))
-        .agg(sum(col("__d")).as("n_edges"),
-          count(lit(1)).as("n_srcs"),
-          max(col("__d")).as("max_degree"))
-      spine.join(census, Seq("layer"), "left")
-        .select(col("layer"), lit(num).as("a_num"),
-          lit(den).as("a_den"), col("n_edges"),
-          coalesce(col("n_srcs"), lit(0L)).as("n_srcs"),
-          col("max_degree"))
-    }.reduce(_.unionByName(_))
-      .select(col("layer").cast("int").as("layer"), col("a_num"),
-        col("a_den"), col("n_edges"), col("n_srcs"), col("max_degree"))
+    pruneParamsChecked(k, alphas)
+    pruneCensus(foldCacheChecked(foldCache, k, Some(maxLayer),
+        "pruneLayeredSweepFrom"), Seq("layer"), alphas,
+      layerSpine(foldCache.sparkSession, maxLayer))
   }
 
   /** [[pruneSweep]] PER LAYER — where HNSW's efConstruction/α trade
@@ -2055,31 +1946,46 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, maxLayer: Int,
       alphas: Seq[(Long, Long)]): DataFrame = {
     require(alphas.nonEmpty, "pruneLayeredSweep: need at least one alpha")
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val g = layeredPruneInputChecked(layeredGraph, k, maxLayer,
-      alphas.head._1, alphas.head._2)
-    val vecs = Ivf.quantized(base, idCol, vecCol)
-    val keys = Seq("layer", "src")
-    val perSrc = rngFoldInput(g, rngPairTable(g, vecs, keys), keys)
-      .transform(graft.util.CacheScope.persist)
-    val spark = layeredGraph.sparkSession
+    pruneParamsChecked(k, alphas)
+    pruneCensus(pruneFoldInput(prunedLayers(maxLayer), layeredGraph, base,
+        idCol, vecCol, k).transform(graft.util.CacheScope.persist),
+      Seq("layer"), alphas, layerSpine(layeredGraph.sparkSession, maxLayer))
+  }
+
+  /** The kept-edge census of every sweep verb over a persisted fold
+    * input: per α a map-only fold, then per (keys…) group the edge
+    * total, the sources retaining any edge and the max out-degree.
+    * `spine` left-joins the per-group rows onto the groups that must
+    * report (the layer spine; the identity for a flat census, whose
+    * one global row always exists). Output: (keys…, a_num, a_den,
+    * n_edges, n_srcs, max_degree). */
+  private def pruneCensus(perSrc: DataFrame, keys: Seq[String],
+      alphas: Seq[(Long, Long)],
+      spine: DataFrame => DataFrame): DataFrame = {
+    val kc = keys.map(col)
+    alphas.map { case (num, den) =>
+      spine(rngFold(perSrc, num, den, keys :+ "src")
+          .groupBy(kc :+ col("src"): _*).agg(count(lit(1)).as("__d"))
+          .groupBy(kc: _*)
+          .agg(sum(col("__d")).as("n_edges"),
+            count(lit(1)).as("n_srcs"),
+            max(col("__d")).as("max_degree")))
+        .select(kc ++ Seq(lit(num).as("a_num"), lit(den).as("a_den"),
+          col("n_edges"), coalesce(col("n_srcs"), lit(0L)).as("n_srcs"),
+          col("max_degree")): _*)
+    }.reduce(_.unionByName(_))
+      .select(keyInts(keys) ++ Seq(col("a_num"),
+        col("a_den"), col("n_edges"), col("n_srcs"),
+        col("max_degree")): _*)
+  }
+
+  /** Left-joins per-layer rows onto the bounded layer spine
+    * 0..maxLayer, so a layer with no rows still reports one. */
+  private def layerSpine(spark: SparkSession,
+      maxLayer: Int): DataFrame => DataFrame = {
     val spine = spark.range(0, maxLayer + 1L)
       .select(col("id").cast("int").as("layer"))
-    alphas.map { case (num, den) =>
-      val census = rngFold(perSrc, num, den, keys)
-        .groupBy(col("layer"), col("src")).agg(count(lit(1)).as("__d"))
-        .groupBy(col("layer"))
-        .agg(sum(col("__d")).as("n_edges"),
-          count(lit(1)).as("n_srcs"),
-          max(col("__d")).as("max_degree"))
-      spine.join(census, Seq("layer"), "left")
-        .select(col("layer"), lit(num).as("a_num"),
-          lit(den).as("a_den"), col("n_edges"),
-          coalesce(col("n_srcs"), lit(0L)).as("n_srcs"),
-          col("max_degree"))
-    }.reduce(_.unionByName(_))
-      .select(col("layer").cast("int").as("layer"), col("a_num"),
-        col("a_den"), col("n_edges"), col("n_srcs"), col("max_degree"))
+    spine.join(_, Seq("layer"), "left")
   }
 
   /** The α-INDEPENDENT prune-tuning CACHE, as a STORED build
@@ -2090,17 +1996,16 @@ object Similarity {
     * level builds this ONCE next to the graph (it is the expensive
     * half of every sweep: the two corpus-vector joins + the group
     * shuffle) and folds every α and every re-tune from the parquet —
-    * the [[pruneSweepQuantized]] factoring promoted to a stored
-    * table. Probes the fail-loud max-rank contract at build time; the
-    * `*From` sweeps cross-check the in-row `__k` metadata (the ADVICE
+    * the [[pruneSweep]] factoring promoted to a stored table. Probes
+    * the fail-loud max-rank contract at build time; the `*From`
+    * sweeps cross-check the in-row `__k` metadata (the ADVICE
     * fail-loud rule — a cache built with a different k must raise,
     * not serve its own k's census under the caller's label).
     * Schema: (src, __es, __k). */
   def pruneFoldCache(graph: DataFrame, base: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    val g = pruneInputChecked(graph, k, 1L, 1L)
-    rngFoldInput(g, rngPairTable(g, Ivf.quantized(base, idCol, vecCol)))
-      .withColumn("__k", lit(k))
+    pruneParamsChecked(k, Nil)
+    foldCacheOf(flatShape, graph, base, idCol, vecCol, k, None)
   }
 
   /** [[pruneFoldCache]] for the LAYERED table — one (layer, src)-keyed
@@ -2109,12 +2014,25 @@ object Similarity {
     * Schema: (layer, src, __es, __k, __max_layer). */
   def pruneLayeredFoldCache(layeredGraph: DataFrame, base: DataFrame,
       idCol: String, vecCol: String, k: Int, maxLayer: Int): DataFrame = {
-    val g = layeredPruneInputChecked(layeredGraph, k, maxLayer, 1L, 1L)
-    val keys = Seq("layer", "src")
-    rngFoldInput(g, rngPairTable(g,
-        Ivf.quantized(base, idCol, vecCol), keys), keys)
-      .withColumn("__k", lit(k))
-      .withColumn("__max_layer", lit(maxLayer))
+    val s = prunedLayers(maxLayer)
+    pruneParamsChecked(k, Nil)
+    foldCacheOf(s, layeredGraph, base, idCol, vecCol, k, Some(maxLayer))
+  }
+
+  /** The fold-cache build of either shape — also the prep step of the
+    * recall sweeps, which fold the same cache in-plan. */
+  private def foldCacheOf(s: Shape, graph: DataFrame, base: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      maxLayer: Option[Int]): DataFrame =
+    withCacheMeta(pruneFoldInput(s, graph, base, idCol, vecCol, k), k,
+      maxLayer)
+
+  /** A fold cache's in-row build metadata: `__k`, plus `__max_layer`
+    * for a layered cache. */
+  private def withCacheMeta(df: DataFrame, k: Int,
+      maxLayer: Option[Int]): DataFrame = {
+    val withK = df.withColumn("__k", lit(k))
+    maxLayer.fold(withK)(m => withK.withColumn("__max_layer", lit(m)))
   }
 
   /** Stored-cache metadata gate shared by the four `*From` sweeps (the
@@ -2190,7 +2108,7 @@ object Similarity {
     * artifact has. A cache row is a pure per-source function of the
     * source's rank list and its neighbors' vectors — exactly the
     * property the pruned-table maintenance verbs exploit — so the
-    * SAME changed-source superset applies ([[upsertChangedFlat]],
+    * SAME changed-source superset applies ([[upsertChanged]],
     * shared code): changed sources' fold-input rows recompute over
     * the post-upsert vectors (one pair build + one group shuffle,
     * both batch-proportional), every other source's stored row passes
@@ -2206,24 +2124,14 @@ object Similarity {
     require(k >= 1, s"upsertPruneFoldCache: k must be >= 1, got $k")
     val cache = foldCacheChecked(storedCache, k, None,
       "upsertPruneFoldCache")
-    val m = upsertChangedFlat(storedGraph, storedIndex, batchIndex, k)
-    val gChanged = m.graph
-      .join(broadcast(m.changed), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val recomputed = rngFoldInput(gChanged,
-        rngPairTable(gChanged, m.vecs))
-      .withColumn("__k", lit(k))
-    val passthrough = cache
-      .select(col("src"), col("__es"), col("__k"))
-      .join(broadcast(m.changed), Seq("src"), "left_anti")
-    recomputed.unionByName(passthrough)
+    refreshTail(upsertChanged(flatShape, storedGraph, storedIndex,
+      batchIndex, k), cache, k, None)
   }
 
   /** [[upsertPruneFoldCache]]'s DELETE direction — compose with
     * [[purgePrunedKnnGraph]]: dead sources' cache rows drop, the
     * EXACT re-election set (sources adjacent to a deleted dst —
-    * [[purgeChangedFlat]], shared code) recomputes over the survivor
+    * [[purgeChanged]], shared code) recomputes over the survivor
     * vectors, everyone else passes through verbatim. ≡ the full
     * rebuild over the purged graph bit-for-bit. */
   def purgePruneFoldCache(storedGraph: DataFrame,
@@ -2232,26 +2140,13 @@ object Similarity {
     require(k >= 1, s"purgePruneFoldCache: k must be >= 1, got $k")
     val cache = foldCacheChecked(storedCache, k, None,
       "purgePruneFoldCache")
-    val (dead, m) = purgeChangedFlat(storedGraph, storedIndex,
-      tombstones, k)
-    val gChanged = m.graph
-      .join(broadcast(m.changed), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val recomputed = rngFoldInput(gChanged,
-        rngPairTable(gChanged, m.vecs))
-      .withColumn("__k", lit(k))
-    val passthrough = cache
-      .select(col("src"), col("__es"), col("__k"))
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(m.changed), Seq("src"), "left_anti")
-    recomputed.unionByName(passthrough)
+    refreshTail(purgeChanged(flatShape, storedGraph, storedIndex,
+      tombstones, k), cache, k, None)
   }
 
   /** [[upsertPruneFoldCache]] for the LAYERED cache — ONE
     * (layer, src)-keyed recompute over the shared changed frame
-    * ([[upsertChangedLayered]], the q311 unification's machinery):
+    * ([[upsertChanged]], the q311 unification's machinery):
     * one upsert checkpoint, one pair table, one group shuffle for
     * every layer's refresh, verbatim passthrough per (layer, src).
     * `maxLayer` must equal the cache's build (exactLayers — a
@@ -2265,31 +2160,15 @@ object Similarity {
         s"maxLayer=$maxLayer >= 0")
     val cache = foldCacheChecked(storedCache, k, Some(maxLayer),
       "upsertPruneLayeredFoldCache", exactLayers = true)
-    val m = upsertChangedLayered(storedLayered, storedIndex,
-      batchIndex, k, maxLayer)
-    val keys = Seq("layer", "src")
-    val gChanged = m.graph
-      .join(broadcast(m.changed), keys, "left_semi")
-      .transform(graft.util.CacheScope.persist)
-    val recomputed = rngFoldInput(gChanged,
-        rngPairTable(gChanged, m.vecs, keys), keys)
-      .withColumn("__k", lit(k))
-      .withColumn("__max_layer", lit(maxLayer))
-    val passthrough = cache
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("__es"), col("__k"), col("__max_layer"))
-      .join(broadcast(m.changed), keys, "left_anti")
-    recomputed
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("__es"), col("__k"), col("__max_layer"))
-      .unionByName(passthrough)
+    refreshTail(upsertChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, batchIndex, k), cache, k, Some(maxLayer))
   }
 
   /** [[purgePruneFoldCache]] for the LAYERED cache — dead (layer,
     * src) rows drop, each layer's exact re-election set recomputes in
-    * the one keyed pass ([[purgeChangedLayered]]), everyone else
-    * passes through. ≡ the full rebuild over the purged layered
-    * graph bit-for-bit. */
+    * the one keyed pass ([[purgeChanged]]), everyone else passes
+    * through. ≡ the full rebuild over the purged layered graph
+    * bit-for-bit. */
   def purgePruneLayeredFoldCache(storedLayered: DataFrame,
       storedCache: DataFrame, storedIndex: DataFrame,
       tombstones: DataFrame, k: Int, maxLayer: Int): DataFrame = {
@@ -2298,54 +2177,24 @@ object Similarity {
         s"maxLayer=$maxLayer >= 0")
     val cache = foldCacheChecked(storedCache, k, Some(maxLayer),
       "purgePruneLayeredFoldCache", exactLayers = true)
-    val (dead, m) = purgeChangedLayered(storedLayered, storedIndex,
-      tombstones, k, maxLayer)
-    val keys = Seq("layer", "src")
-    val gChanged = m.graph
-      .join(broadcast(m.changed), keys, "left_semi")
-      .transform(graft.util.CacheScope.persist)
-    val recomputed = rngFoldInput(gChanged,
-        rngPairTable(gChanged, m.vecs, keys), keys)
-      .withColumn("__k", lit(k))
-      .withColumn("__max_layer", lit(maxLayer))
-    val passthrough = cache
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("__es"), col("__k"), col("__max_layer"))
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(m.changed), keys, "left_anti")
-    recomputed
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("__es"), col("__k"), col("__max_layer"))
-      .unionByName(passthrough)
+    refreshTail(purgeChanged(layeredShape(maxLayer), storedLayered,
+      storedIndex, tombstones, k), cache, k, Some(maxLayer))
   }
 
-  /** The LAYERED purge changed set — [[purgeChangedFlat]] with layer
-    * in the key: the exact re-election set per layer ((layer, src)
-    * pairs adjacent to a deleted dst, survivors only), over ONE
-    * [[purgeLayeredKnnGraph]] checkpoint and the shared survivor
-    * vector table. */
-  private def purgeChangedLayered(storedLayered: DataFrame,
-      storedIndex: DataFrame, tombstones: DataFrame, k: Int,
-      maxLayer: Int): (DataFrame, MaintChanged) = {
-    val dead = tombstones.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    val purged = graft.util.CacheScope.registerCheckpointed(
-      purgeLayeredKnnGraph(storedLayered, storedIndex, tombstones, k,
-        maxLayer).localCheckpoint())
-    val changed = layeredGraphSlice(storedLayered, maxLayer)
-      .join(broadcast(dead.select(col("vec_id").as("dst"))),
-        Seq("dst"), "left_semi")
-      .select(col("layer"), col("src")).distinct()
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .transform(graft.util.CacheScope.persist)
-    val vecs = storedIndex.select(col("vec_id"), col("qvec"))
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-    (dead, MaintChanged(
-      purged.select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk")),
-      changed, vecs))
+  /** The shared tail of the four fold-cache refresh verbs: the changed
+    * groups' fold-input rows recompute in ONE (keys…, src)-keyed pass
+    * (one pair table, one group shuffle) with the cache's build
+    * metadata, every other live group's stored row passes through. */
+  private def refreshTail(m: MaintChanged, cache: DataFrame, k: Int,
+      maxLayer: Option[Int]): DataFrame = {
+    val g = changedEdges(m)
+    val keys = m.keys :+ "src"
+    val recomputed = withCacheMeta(
+      rngFoldInput(g, rngPairTable(g, m.vecs, keys), keys), k, maxLayer)
+    val cols = keyInts(m.keys) ++ (Seq("src", "__es", "__k") ++
+      maxLayer.map(_ => "__max_layer")).map(col)
+    recomputed.select(cols: _*)
+      .unionByName(unchanged(cache.select(cols: _*), m))
   }
 
   /** RECALL-per-α over the flat prune sweep — the half of the
@@ -2356,24 +2205,21 @@ object Similarity {
     * pruned graph at the given (entryK, beam, hops) budget, and reads
     * [[graphRecallCost]]'s recall/cost pair aggregated over the query
     * panel. The α-independent fold input builds ONCE (one pair table,
-    * one group shuffle — the [[pruneSweepQuantized]] factoring); each
-    * α is then a map-only fold plus the walk, and the walk itself is
-    * the bounded serve plan (|Q|·beam frames, never corpus-shaped).
-    * `exact` is the shared baseline result set. Output one row per α:
-    * (a_num, a_den, n_queries, hits_total, recall_micro_mean,
-    * evals_total, frontier_total). */
+    * one group shuffle — the [[pruneSweep]] factoring); each α is then
+    * a map-only fold plus the walk, and the walk itself is the bounded
+    * serve plan (|Q|·beam frames, never corpus-shaped). `exact` is the
+    * shared baseline result set. Output one row per α: (a_num, a_den,
+    * n_queries, hits_total, recall_micro_mean, evals_total,
+    * frontier_total). */
   def pruneRecallSweep(graph: DataFrame, base: DataFrame,
       idCol: String, vecCol: String, queries: DataFrame,
       exact: DataFrame, k: Int, alphas: Seq[(Long, Long)], entryK: Int,
       beam: Int, hops: Int, topK: Int): DataFrame = {
     walkChecked("pruneRecallSweep", entryK, Some(topK), capped = true,
       alphas.map(_ => Descent(beam, 0, hops)))
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val g = pruneInputChecked(graph, k, alphas.head._1, alphas.head._2)
+    pruneParamsChecked(k, alphas)
     pruneRecallSweepFrom(
-      rngFoldInput(g, rngPairTable(g,
-        Ivf.quantized(base, idCol, vecCol)))
-        .withColumn("__k", lit(k)),
+      foldCacheOf(flatShape, graph, base, idCol, vecCol, k, None),
       base, idCol, vecCol, queries, exact, k, alphas, entryK, beam,
       hops, topK)
   }
@@ -2387,17 +2233,27 @@ object Similarity {
   def pruneRecallSweepFrom(foldCache: DataFrame, base: DataFrame,
       idCol: String, vecCol: String, queries: DataFrame,
       exact: DataFrame, k: Int, alphas: Seq[(Long, Long)], entryK: Int,
-      beam: Int, hops: Int, topK: Int): DataFrame = {
-    val verb = "pruneRecallSweepFrom"
+      beam: Int, hops: Int, topK: Int): DataFrame =
+    recallSweepFrom("pruneRecallSweepFrom", foldCache, Nil, None, base,
+      idCol, vecCol, queries, exact, k, alphas, entryK,
+      Descent(beam, 0, hops), topK)
+
+  /** The recall sweep of either shape over a fold cache: every α's
+    * pruned edges stack under a variant key and the WHOLE sweep walks
+    * ONCE (the variant walk — one hop chain, one scan of the quantized
+    * corpus, instead of a chain per α); [[sweepRecallCost]] reads one
+    * row per α off it. */
+  private def recallSweepFrom(verb: String, foldCache: DataFrame,
+      keys: Seq[String], maxLayer: Option[Int], base: DataFrame,
+      idCol: String, vecCol: String, queries: DataFrame,
+      exact: DataFrame, k: Int, alphas: Seq[(Long, Long)], entryK: Int,
+      descent: Descent, topK: Int): DataFrame = {
     val d = walkChecked(verb, entryK, Some(topK), capped = true,
-      alphas.map(_ => Descent(beam, 0, hops)))
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val perSrc = foldCacheChecked(foldCache, k, None, verb)
-    // every α's pruned edges stack under a variant key and the WHOLE
-    // sweep walks ONCE (the variant walk — one hop chain, one scan of
-    // the quantized corpus, instead of a chain per α)
+      alphas.map(_ => descent))
+    pruneParamsChecked(k, alphas)
+    val perSrc = foldCacheChecked(foldCache, k, maxLayer, verb)
     val pruned = alphas.zipWithIndex.map { case ((num, den), i) =>
-      rngFold(perSrc, num, den).withColumn("__v", lit(i))
+      rngFold(perSrc, num, den, keys :+ "src").withColumn("__v", lit(i))
     }.reduce(_.unionByName(_))
     val exactP = exact.transform(graft.util.CacheScope.persist)
     sweepRecallCost(beamWalk(verb, pruned, base, queries, idCol, vecCol,
@@ -2491,15 +2347,10 @@ object Similarity {
       hopsPerLayer: Int, topK: Int): DataFrame = {
     walkChecked("pruneLayeredRecallSweep", entryK, Some(topK),
       capped = true, alphas.map(_ => Descent(beam, maxLayer, hopsPerLayer)))
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val g = layeredPruneInputChecked(layeredGraph, k, maxLayer,
-      alphas.head._1, alphas.head._2)
-    val keys = Seq("layer", "src")
+    pruneParamsChecked(k, alphas)
     pruneLayeredRecallSweepFrom(
-      rngFoldInput(g, rngPairTable(g,
-        Ivf.quantized(base, idCol, vecCol), keys), keys)
-        .withColumn("__k", lit(k))
-        .withColumn("__max_layer", lit(maxLayer)),
+      foldCacheOf(prunedLayers(maxLayer), layeredGraph, base, idCol,
+        vecCol, k, Some(maxLayer)),
       base, idCol, vecCol, queries, exact, k, maxLayer, alphas,
       entryK, beam, hopsPerLayer, topK)
   }
@@ -2511,22 +2362,10 @@ object Similarity {
       base: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, exact: DataFrame, k: Int, maxLayer: Int,
       alphas: Seq[(Long, Long)], entryK: Int, beam: Int,
-      hopsPerLayer: Int, topK: Int): DataFrame = {
-    val verb = "pruneLayeredRecallSweepFrom"
-    val d = walkChecked(verb, entryK, Some(topK), capped = true,
-      alphas.map(_ => Descent(beam, maxLayer, hopsPerLayer)))
-    alphas.foreach { case (num, den) => pruneParamsChecked(k, num, den) }
-    val keys = Seq("layer", "src")
-    val perSrc = foldCacheChecked(foldCache, k, Some(maxLayer), verb)
-    // every α's pruned stack under a variant key, ONE descent for the
-    // whole sweep (the variant walk)
-    val pruned = alphas.zipWithIndex.map { case ((num, den), i) =>
-      rngFold(perSrc, num, den, keys).withColumn("__v", lit(i))
-    }.reduce(_.unionByName(_))
-    val exactP = exact.transform(graft.util.CacheScope.persist)
-    sweepRecallCost(beamWalk(verb, pruned, base, queries, idCol, vecCol,
-      entryK, d, keepHops = true), exactP, k, topK, alphas)
-  }
+      hopsPerLayer: Int, topK: Int): DataFrame =
+    recallSweepFrom("pruneLayeredRecallSweepFrom", foldCache,
+      Seq("layer"), Some(maxLayer), base, idCol, vecCol, queries, exact,
+      k, alphas, entryK, Descent(beam, maxLayer, hopsPerLayer), topK)
 
   /** A whole EQUAL-BUDGET (beam, hopsPerLayer, maxLayer) sweep from
     * ONE descent — q286's frontier as a single pass over the stored
@@ -2585,51 +2424,36 @@ object Similarity {
   def purgeKnnGraph(storedGraph: DataFrame, storedIndex: DataFrame,
       tombstones: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"purgeKnnGraph: k must be >= 1, got $k")
-    val dead = tombstones.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    val sg = storedGraph
-      .select(col("src"), col("dst"), col("d2"), col("rnk"))
-      .transform(graft.util.CacheScope.persist)
-    val live = storedIndex.select(col("vec_id"), col("cid"), col("qvec"))
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-      .transform(graft.util.CacheScope.persist)
+    purgeKeyed(flatShape, storedGraph, storedIndex, tombstones, k)
+  }
+
+  /** The purge of either shape, per key group — one (keys…, cid)-keyed
+    * re-election with ONE (keys…, src) window; tombstone ids absent
+    * from a group no-op there. */
+  private def purgeKeyed(s: Shape, storedGraph: DataFrame,
+      storedIndex: DataFrame, tombstones: DataFrame, k: Int): DataFrame = {
+    val kc = s.keys.map(col)
+    val dead = distinctIds(tombstones)
+    val deadSrc = broadcast(dead.select(col("vec_id").as("src")))
+    val sg = s.slice(storedGraph).transform(graft.util.CacheScope.persist)
+    val live = s.pin(s.fan(indexRows(storedIndex))
+      .join(broadcast(dead), Seq("vec_id"), "left_anti"))
     // survivors that lost an edge: adjacent to a deleted dst —
     // O(deleted · reverse-degree), a bounded touched set
     val affected = sg
       .join(broadcast(dead.select(col("vec_id").as("dst"))),
         Seq("dst"), "left_semi")
-      .select(col("src")).distinct()
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
+      .select(kc :+ col("src"): _*).distinct()
+      .join(deadSrc, Seq("src"), "left_anti")
       .transform(graft.util.CacheScope.persist)
-    val a = live
-      .join(affected.select(col("src").as("vec_id")), Seq("vec_id"),
-        "left_semi")
-      .select(col("vec_id").as("src"), col("cid"),
-        col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
-    val b = live.select(col("vec_id").as("dst"), col("cid"),
-      col("qvec").as("__dv"),
-      dot(col("qvec"), col("qvec")).as("__dn"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    val reElect = a.join(b, Seq("cid"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      .select(col("src"), col("dst"), col("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
+    val a = srcSide(live.join(affected.select(kc :+ col("src").as("vec_id"): _*),
+      s.keys :+ "vec_id", "left_semi"), s.keys)
     // untouched live vertices keep their STORED rows verbatim — their
     // top-k over the survivors IS the stored top-k (deletion only
     // removes candidates, and none of theirs was removed)
-    val passthrough = sg
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(affected, Seq("src"), "left_anti")
-    reElect.unionByName(passthrough)
+    electTopK(cellPairs(a, dstSide(live, s.keys), s.keys), s.keys, k)
+      .unionByName(sg.join(deadSrc, Seq("src"), "left_anti")
+        .join(affected, s.keys :+ "src", "left_anti"))
   }
 
   /** LAYERED kNN graph — the HNSW shape on the stored-table substrate:
@@ -2657,42 +2481,13 @@ object Similarity {
     * seam a stored deployment builds through: the codebook is itself a
     * stored table (trained once, read from parquet), so the layered
     * build must compose from it rather than retrain per invocation
-    * (the q194 fixed-codebook discipline on the build side). */
+    * (the q194 fixed-codebook discipline on the build side). The
+    * [[knnGraphSeed]] build with layer in the key ([[seedKeyed]]). */
   def layeredKnnGraphWith(coarse: DataFrame, embeddings: DataFrame,
       idCol: String, vecCol: String, k: Int, maxLayer: Int): DataFrame = {
     require(k >= 1 && maxLayer >= 0,
       s"layeredKnnGraph: k=$k must be >= 1, maxLayer=$maxLayer >= 0")
-    // ONE (layer, cid)-keyed self-join over the layer-fanned index +
-    // ONE (layer, src) election window — the per-layer form paid the
-    // full seed chain (index build, cell join, rank exchange) per
-    // layer for key-disjoint work (the round-17 unification; ≡ by
-    // per-group disjointness, spec-pinned). Geometric fan ≤ 2× rows.
-    // NOT persisted: caching the fan pins an InMemoryRelation on both
-    // join sides, which forces a sort-merge join with the FULL pair
-    // table through the rank exchange (measured 12× the per-layer
-    // chains' shuffle at spec scale); unpersisted, AQE broadcasts the
-    // dst side and the partial WindowGroupLimit cuts the exchange to
-    // ~Σ n_ℓ·k rows — the knnGraphSeed shape, fanned
-    val idx = layeredIndexFan(
-        Ivf.flatIndex(coarse, embeddings, idCol, vecCol, Nil), maxLayer)
-      .withColumn("__n2", dot(col("qvec"), col("qvec")))
-    val a = idx.select(col("layer"), col("vec_id").as("src"),
-      col("cid"), col("qvec").as("__sv"), col("__n2").as("__sn"))
-    val b = idx.select(col("layer"), col("vec_id").as("dst"),
-      col("cid"), col("qvec").as("__dv"), col("__n2").as("__dn"))
-    val w = Window.partitionBy(col("layer"), col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    a.join(b, Seq("layer", "cid"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      // drop the vectors BEFORE the rank exchange (the flatIndex
-      // lesson — the window input is Σ layer-cell² rows)
-      .select(col("layer"), col("src"), col("dst"), col("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("layer"), col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
+    seedKeyed(layeredShape(maxLayer), coarse, embeddings, idCol, vecCol, k)
   }
 
   /** LAYERED build + NN-DESCENT refinement — [[knnGraph]]'s multi-round
@@ -2824,35 +2619,28 @@ object Similarity {
       maxLayer: Int): DataFrame = {
     require(k >= 1 && maxLayer >= 0,
       s"upsertLayeredKnnSeed: k=$k must be >= 1, maxLayer=$maxLayer >= 0")
-    val purged = purgeLayeredKnnGraph(storedLayered, storedIndex,
-      batchIndex.select(col("vec_id")), k, maxLayer)
-    val ids = batchIndex.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    appendLayeredKnnSeed(purged,
-      storedIndex.join(broadcast(ids), Seq("vec_id"), "left_anti"),
-      batchIndex, k, maxLayer)
+    upsertKeyed(layeredShape(maxLayer), storedLayered, storedIndex,
+      batchIndex, k)
   }
 
-  /** The layered families' index FAN: each full-corpus flat-index row
-    * replicated to the layers the promotion rule (id ≡ 0 mod 2^ℓ)
-    * puts it in — an in-row generator over ONE index scan (geometric
-    * fan ≤ 2× rows), so every layered maintenance verb can run its
-    * joins and windows ONCE with `layer` in the key instead of a
-    * chain of member-filtered scans per layer (the round-17
-    * unification — same argument as the (layer, src)-keyed prune
-    * fold: all per-layer work is key-disjoint). */
-  private def layeredIndexFan(index: DataFrame, maxLayer: Int): DataFrame =
-    index.select(col("vec_id"), col("cid"), col("qvec"))
-      .withColumn("layer", explode(expr(
-        s"filter(sequence(0, $maxLayer), l -> vec_id % shiftleft(1L, l) = 0)")))
+  /** The layered families' FAN: each id-keyed row replicated to the
+    * layers the promotion rule (id ≡ 0 mod 2^ℓ) puts it in — an in-row
+    * generator over ONE scan (geometric fan ≤ 2× rows), so every
+    * layered build and maintenance verb runs its joins and windows
+    * ONCE with `layer` in the key instead of a chain of member-filtered
+    * scans per layer (the round-17 unification — same argument as the
+    * (layer, src)-keyed prune fold: all per-layer work is
+    * key-disjoint). */
+  private def layeredIndexFan(rows: DataFrame, maxLayer: Int): DataFrame =
+    rows.withColumn("layer", explode(expr(
+      s"filter(sequence(0, $maxLayer), l -> vec_id % shiftleft(1L, l) = 0)")))
 
   /** The layered graph projection every layered maintenance verb
     * reads: layers 0..maxLayer, layer normalized to int. */
   private def layeredGraphSlice(storedLayered: DataFrame,
       maxLayer: Int): DataFrame =
     storedLayered.filter(col("layer").between(0, maxLayer))
-      .select(col("layer").cast("int").as("layer"), col("src"),
-        col("dst"), col("d2"), col("rnk"))
+      .select(edgeCols(Seq("layer")): _*)
 
   /** O(new) APPEND for the stored LAYERED graph — [[appendKnnSeed]]'s
     * contract per layer (the deterministic promotion rule is
@@ -2863,68 +2651,20 @@ object Similarity {
     * score their grown cell, touched-cell members re-elect, untouched
     * bags pass through bit-identical, a layer the batch misses passes
     * through whole), executed as ONE (layer, cid)-keyed merge over
-    * the [[layeredIndexFan]] with ONE (layer, src) election window —
-    * the per-layer-chain form paid every join, window, and exchange
-    * per layer for key-disjoint work (the round-17 unification; ≡ by
-    * the same per-group argument as the prune fold, spec-pinned).
-    * `storedIndex`/`batchIndex` are full-corpus [[graft.operators.Ivf
-    * .flatIndex]] rows. Output ≡ the full [[layeredKnnGraph]] rebuild
-    * over history ∪ batch. */
+    * the [[layeredIndexFan]] with ONE (layer, src) election window
+    * ([[appendKeyed]]) — the per-layer-chain form paid every join,
+    * window, and exchange per layer for key-disjoint work (the
+    * round-17 unification; ≡ by the same per-group argument as the
+    * prune fold, spec-pinned). `storedIndex`/`batchIndex` are
+    * full-corpus [[graft.operators.Ivf.flatIndex]] rows. Output ≡ the
+    * full [[layeredKnnGraph]] rebuild over history ∪ batch. */
   def appendLayeredKnnSeed(storedLayered: DataFrame,
       storedIndex: DataFrame, batchIndex: DataFrame, k: Int,
       maxLayer: Int): DataFrame = {
     require(k >= 1 && maxLayer >= 0,
       s"appendLayeredKnnSeed: k=$k must be >= 1, maxLayer=$maxLayer >= 0")
-    val sg = layeredGraphSlice(storedLayered, maxLayer)
-      .transform(graft.util.CacheScope.persist)
-    val si = layeredIndexFan(storedIndex, maxLayer)
-    val bL = layeredIndexFan(batchIndex, maxLayer)
-    val b = bL.select(col("layer"), col("vec_id").as("dst"),
-      col("cid"), col("qvec").as("__dv"),
-      dot(col("qvec"), col("qvec")).as("__dn"))
-    val full = si.select(col("layer"), col("vec_id").as("dst"),
-        col("cid"), col("qvec").as("__dv"),
-        dot(col("qvec"), col("qvec")).as("__dn"))
-      .unionByName(b)
-    val w = Window.partitionBy(col("layer"), col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    def sq(df: DataFrame): DataFrame = df
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      .select(col("layer"), col("src"), col("dst"), col("d2"))
-    // new vertices: exact top-k within the grown cell, per layer
-    val newEdges = sq(bL.select(col("layer"),
-        col("vec_id").as("src"), col("cid"), col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
-      .join(full, Seq("layer", "cid")))
-    // old vertices in touched (layer, cell)s: stored top-k ∪ batch
-    // cell-mates
-    val touched = si
-      .join(b.select(col("layer"), col("cid")).distinct(),
-        Seq("layer", "cid"), "left_semi")
-      .select(col("layer"), col("vec_id").as("src"), col("cid"),
-        col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
-      .transform(graft.util.CacheScope.persist)
-    val vsBatch = sq(touched.join(b, Seq("layer", "cid")))
-    val reElect = sg
-      .join(touched.select(col("layer"), col("src")),
-        Seq("layer", "src"), "left_semi")
-      .select(col("layer"), col("src"), col("dst"), col("d2"))
-      .unionByName(vsBatch)
-    // untouched rows keep their STORED ranks verbatim
-    val passthrough = sg
-      .join(touched.select(col("layer"), col("src")),
-        Seq("layer", "src"), "left_anti")
-      .select(col("layer"), col("src"), col("dst"), col("d2"),
-        col("rnk"))
-    reElect.unionByName(newEdges)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("layer"), col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
-      .unionByName(passthrough)
+    appendKeyed(layeredShape(maxLayer), storedLayered, storedIndex,
+      batchIndex, k)
   }
 
   /** Vertex PURGE for the stored LAYERED graph — [[purgeKnnGraph]]'s
@@ -2933,57 +2673,18 @@ object Similarity {
     * from that layer's cell members; tombstone ids absent from a
     * layer no-op there), executed as ONE (layer, cid)-keyed
     * re-election over the [[layeredIndexFan]] with ONE (layer, src)
-    * window — the per-layer-chain form paid every join and exchange
-    * per layer (the round-17 unification, ≡ by per-group disjointness,
-    * spec-pinned). Upper layers are sparser, so their fan rows form
-    * the usual geometric series. Output ≡ the full [[layeredKnnGraph]]
-    * rebuild over the survivors. */
+    * window ([[purgeKeyed]]) — the per-layer-chain form paid every
+    * join and exchange per layer (the round-17 unification, ≡ by
+    * per-group disjointness, spec-pinned). Upper layers are sparser,
+    * so their fan rows form the usual geometric series. Output ≡ the
+    * full [[layeredKnnGraph]] rebuild over the survivors. */
   def purgeLayeredKnnGraph(storedLayered: DataFrame,
       storedIndex: DataFrame, tombstones: DataFrame, k: Int,
       maxLayer: Int): DataFrame = {
     require(k >= 1 && maxLayer >= 0,
       s"purgeLayeredKnnGraph: k=$k must be >= 1, maxLayer=$maxLayer >= 0")
-    val dead = tombstones.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    val sg = layeredGraphSlice(storedLayered, maxLayer)
-      .transform(graft.util.CacheScope.persist)
-    val live = layeredIndexFan(storedIndex, maxLayer)
-      .join(broadcast(dead), Seq("vec_id"), "left_anti")
-    // survivors that lost an edge, per layer: adjacent to a deleted
-    // dst — O(deleted · reverse-degree) (layer, src) pairs
-    val affected = sg
-      .join(broadcast(dead.select(col("vec_id").as("dst"))),
-        Seq("dst"), "left_semi")
-      .select(col("layer"), col("src")).distinct()
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .transform(graft.util.CacheScope.persist)
-    val a = live
-      .join(affected.select(col("layer"),
-        col("src").as("vec_id")), Seq("layer", "vec_id"), "left_semi")
-      .select(col("layer"), col("vec_id").as("src"), col("cid"),
-        col("qvec").as("__sv"),
-        dot(col("qvec"), col("qvec")).as("__sn"))
-    val bSide = live.select(col("layer"), col("vec_id").as("dst"),
-      col("cid"), col("qvec").as("__dv"),
-      dot(col("qvec"), col("qvec")).as("__dn"))
-    val w = Window.partitionBy(col("layer"), col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    val reElect = a.join(bSide, Seq("layer", "cid"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("d2", gridDist2(col("__sn"), col("__sv"),
-        col("__dn"), col("__dv")))
-      .select(col("layer"), col("src"), col("dst"), col("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("layer"), col("src"), col("dst"), col("d2"),
-        col("rnk").cast("int").as("rnk"))
-    // untouched live vertices keep their STORED rows verbatim
-    val passthrough = sg
-      .join(broadcast(dead.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(affected, Seq("layer", "src"), "left_anti")
-    reElect.unionByName(passthrough)
+    purgeKeyed(layeredShape(maxLayer), storedLayered, storedIndex,
+      tombstones, k)
   }
 
   /** Graph UPSERT — the q231 composition on the graph pillar, closing
@@ -2998,12 +2699,17 @@ object Similarity {
   def upsertKnnSeed(storedGraph: DataFrame, storedIndex: DataFrame,
       batchIndex: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"upsertKnnSeed: k must be >= 1, got $k")
-    val ids = batchIndex.select(col("vec_id")).distinct()
-      .transform(graft.util.CacheScope.persist)
-    val purged = purgeKnnGraph(storedGraph, storedIndex, ids, k)
-    val liveIndex = storedIndex
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-    appendKnnSeed(purged, liveIndex, batchIndex, k)
+    upsertKeyed(flatShape, storedGraph, storedIndex, batchIndex, k)
+  }
+
+  /** The upsert of either shape: purge the restated ids, then append
+    * their new rows against the live index. */
+  private def upsertKeyed(s: Shape, storedGraph: DataFrame,
+      storedIndex: DataFrame, batchIndex: DataFrame, k: Int): DataFrame = {
+    val ids = distinctIds(batchIndex)
+    appendKeyed(s, purgeKeyed(s, storedGraph, storedIndex, ids, k),
+      storedIndex.join(broadcast(ids), Seq("vec_id"), "left_anti"),
+      batchIndex, k)
   }
 
   def recallAudit(approx: DataFrame, exact: DataFrame, k: Int): DataFrame = {

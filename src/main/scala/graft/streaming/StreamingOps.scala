@@ -56,7 +56,8 @@ object StreamingOps {
     * `Tables.events`. */
   private[graft] def eventsStream(spark: SparkSession,
       streamDir: String): DataFrame = {
-    val probed = spark.read.parquet(streamDir) // footer-only schema probe
+    // schema probe: Spark infers the directory's schema, one job
+    val probed = spark.read.parquet(streamDir)
     probed.schema("ts").dataType match {
       case LongType =>
         spark.readStream.schema(eventsSchema).parquet(streamDir)
@@ -334,7 +335,7 @@ object StreamingOps {
       queryName: String): DataFrame = withNanosAsLong(spark) {
     val streamDir = scratchDir("graft_sse",
       "events.parquet" -> s"$dir/events.parquet")
-    val dim = spark.read.parquet(s"$dir/nation.parquet")
+    val dim = graft.Tables(spark, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
     val enriched = eventsStream(spark, streamDir.toString)
       .withColumn("n_key", col("user_id") % 25)
@@ -661,7 +662,7 @@ object StreamingOps {
       "documents schema drifted: expected (doc_id LONG, text STRING) " +
         s"among ${docsSchema.treeString}")
     val benchSh = graft.operators.Dedup.explodedShingles(
-        spark.read.parquet(s"$dir/documents.parquet")
+        graft.Tables(spark, dir, "documents")
           .filter(col("doc_id") % 25 === 0),
         "doc_id", "text", 3)
       .select(col("sh")).distinct()
@@ -712,7 +713,7 @@ object StreamingOps {
       embSchema.exists(_.name == "embedding"),
       "embeddings schema drifted: expected (vec_id LONG, embedding) " +
         s"among ${embSchema.treeString}")
-    val history = spark.read.parquet(s"$dir/embeddings.parquet")
+    val history = graft.Tables(spark, dir, "embeddings")
       .filter(col("vec_id") % 3 > 0)
     val m = 4
     // bounded driver actions: the optional 64-row permutation and the
@@ -777,7 +778,7 @@ object StreamingOps {
         s"among ${docsSchema.treeString}")
     val historyDigests = graft.operators.Multimodal.sampleFrames(
         graft.operators.Multimodal.withPayload(
-          spark.read.parquet(s"$dir/documents.parquet")
+          graft.Tables(spark, dir, "documents")
             .filter(col("doc_id") % 3 =!= 0),
           "doc_id", "text"),
         "doc_id", frameSize = 64, stride = 1)
@@ -895,7 +896,7 @@ object StreamingOps {
       embSchema.exists(_.name == "embedding"),
       "embeddings schema drifted: expected (vec_id LONG, embedding) " +
         s"among ${embSchema.treeString}")
-    val history = spark.read.parquet(s"$dir/embeddings.parquet")
+    val history = graft.Tables(spark, dir, "embeddings")
       .filter(col("vec_id") % 3 > 0)
     val coarse = graft.operators.Ivf.centroids(history, "vec_id",
       "embedding", 8, 2)
@@ -941,7 +942,7 @@ object StreamingOps {
       embSchema.exists(_.name == "embedding"),
       "embeddings schema drifted: expected (vec_id LONG, embedding) " +
         s"among ${embSchema.treeString}")
-    val history = spark.read.parquet(s"$dir/embeddings.parquet")
+    val history = graft.Tables(spark, dir, "embeddings")
       .filter(col("vec_id") % 3 > 0)
     val coarse = graft.operators.Ivf.centroids(history, "vec_id",
       "embedding", 8, 2)
@@ -989,7 +990,7 @@ object StreamingOps {
       embSchema.exists(_.name == "embedding"),
       "embeddings schema drifted: expected (vec_id LONG, embedding) " +
         s"among ${embSchema.treeString}")
-    val history = spark.read.parquet(s"$dir/embeddings.parquet")
+    val history = graft.Tables(spark, dir, "embeddings")
       .filter(col("vec_id") % 3 > 0)
     val coarse = graft.operators.Ivf.centroids(history, "vec_id",
       "embedding", 8, 2)
@@ -1072,7 +1073,7 @@ object StreamingOps {
       docsSchema.exists(f => f.name == "text" && f.dataType == StringType),
       "documents schema drifted: expected (doc_id LONG, text STRING) " +
         s"among ${docsSchema.treeString}")
-    val historyFps = spark.read.parquet(s"$dir/documents.parquet")
+    val historyFps = graft.Tables(spark, dir, "documents")
       .filter(col("doc_id") % 3 > 0)
       .select(graft.operators.Dedup.fingerprint(col("text")).as("fp"))
       .distinct()

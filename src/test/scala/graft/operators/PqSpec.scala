@@ -2689,6 +2689,93 @@ class PqSpec extends SparkSpec {
     }
   }
 
+  test("flat lifecycle verbs: no layer attribute and no bloom-filter probe in the executed plans") {
+    // the flat and layered graph verbs share one keyed body each, with
+    // Nil as the flat group key; a `layer` column, literal or predicate
+    // leaking into a flat plan would also let Spark inject a runtime
+    // bloom-filter subquery (`might_contain`) on the edge scan
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
+        case _ => p.children
+      }
+      (p +: kids.flatMap(nodes)) ++ p.subqueries.flatMap(nodes)
+    }
+    def offenders(p: SparkPlan): Seq[String] = nodes(p).flatMap { n =>
+      val layer = (n.output ++ n.expressions.flatMap(_.references))
+        .filter(_.name == "layer").map(a => s"${n.nodeName}: $a")
+      val bloom = n.expressions.filter(_.toString.contains("might_contain"))
+        .map(e => s"${n.nodeName}: $e")
+      layer ++ bloom
+    }
+    val e = emb
+    val sdir = tmpDir("graft_flat_plans")
+    def stored(name: String, df: DataFrame): DataFrame = {
+      df.write.parquet(s"$sdir/$name")
+      spark.read.parquet(s"$sdir/$name")
+    }
+    try {
+      val coarse = stored("coarse",
+        Ivf.centroids(e, "vec_id", "embedding", 8, 2))
+      val idx = stored("idx",
+        Ivf.flatIndex(coarse, e, "vec_id", "embedding", Nil))
+      val g = stored("g",
+        Similarity.knnGraphSeed(coarse, e, "vec_id", "embedding", 5))
+      val pruned = stored("pruned",
+        Similarity.pruneGraphRng(g, e, "vec_id", "embedding", 5))
+      val cache = stored("cache",
+        Similarity.pruneFoldCache(g, e, "vec_id", "embedding", 5))
+      val batch = stored("batch", Ivf.flatIndex(coarse,
+        e.filter(col("vec_id") % 7 === 0)
+          .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
+        "vec_id", "embedding", Nil))
+      val history = idx.join(batch.select("vec_id"), Seq("vec_id"),
+        "left_anti")
+      val tombs = e.filter(col("vec_id") % 5 === 0).select("vec_id")
+      val verbs: Seq[(String, () => DataFrame)] = Seq(
+        "knnGraphSeed" -> (() =>
+          Similarity.knnGraphSeed(coarse, e, "vec_id", "embedding", 5)),
+        "appendKnnSeed" -> (() =>
+          Similarity.appendKnnSeed(g, history, batch, 5)),
+        "purgeKnnGraph" -> (() =>
+          Similarity.purgeKnnGraph(g, idx, tombs, 5)),
+        "upsertKnnSeed" -> (() =>
+          Similarity.upsertKnnSeed(g, idx, batch, 5)),
+        "upsertPrunedKnnSeed" -> (() =>
+          Similarity.upsertPrunedKnnSeed(g, pruned, idx, batch, 5)),
+        "purgePrunedKnnGraph" -> (() =>
+          Similarity.purgePrunedKnnGraph(g, pruned, idx, tombs, 5)),
+        "upsertPruneFoldCache" -> (() =>
+          Similarity.upsertPruneFoldCache(g, cache, idx, batch, 5)),
+        "purgePruneFoldCache" -> (() =>
+          Similarity.purgePruneFoldCache(g, cache, idx, tombs, 5)))
+      verbs.foreach { case (verb, build) =>
+        graft.util.CacheScope.withScope {
+          val df = build()
+          assert(df.collect().nonEmpty, s"$verb returned no rows")
+          val bad = offenders(df.queryExecution.executedPlan)
+          assert(bad.isEmpty,
+            s"$verb: the executed plan names a layer or probes a bloom " +
+              s"filter:\n${bad.distinct.mkString("\n")}")
+        }
+      }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(new java.io.File(sdir))
+    }
+  }
+
   test("fold-cache metadata gates: wrong k, missing columns, shallow refresh all raise") {
     val s = spark
     import s.implicits._
